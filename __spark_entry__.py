@@ -107,28 +107,17 @@ def _screen_transcripts(spark: SparkSession, sf: str) -> DataFrame:
     """The full Layer-B → Layer-A pipeline of SURVEY.md §7.0: windowed
     leakage-free featurization of the transcripts table, then the
     random-forest tournament screening loop."""
-    from featurescreening_jl_spark import FeatureFrame, screen
+    from featurescreening_jl_spark import screen
     from featurescreening_jl_spark.operators.window_features import (
-        TURN_FEATURE_COLS,
-        turn_features,
-        turn_sample_id,
+        turn_feature_frame,
     )
 
-    t = _transcripts(spark, sf)
-    # sample_id is the canonical shared definition (turn_sample_id): a
-    # PORTABLE 60-bit md5 hash so the DuckDB oracle can reconstruct the
+    # turn_feature_frame: the canonical sample_id (turn_sample_id, a
+    # PORTABLE 60-bit md5 hash, so the DuckDB oracle can reconstruct the
     # identical ids — this is what makes the flagship screening pipeline
-    # oracle-checkable end to end. The CLI job uses the same expression.
-    # keep_text=False: the raw text never enters the window shuffle (it
-    # dominates row width ~10×; only map-side scalars derived from it do).
-    feats = turn_features(t, keep_text=False).select(
-        turn_sample_id().alias("sample_id"),
-        F.when(F.col("label_next_is_tool") > 0, "tool")
-        .otherwise("no_tool")
-        .alias("label"),
-        *[F.col(c) for c in TURN_FEATURE_COLS],
-    )
-    ff = FeatureFrame(feats, TURN_FEATURE_COLS)
+    # oracle-checkable end to end), the tool/no_tool label and the text
+    # dropped before the window shuffle. The CLI job uses the same frame.
+    ff = turn_feature_frame(_transcripts(spark, sf))
     result = screen(
         ff,
         reduced_size=4,

@@ -55,7 +55,7 @@ class FeatureFrame:
         self._labels_cache: Optional[list[str]] = None
         # the widest DataFrame this frame is a projection of; lets merge()
         # recognize two DISJOINT projections of one (cached, possibly
-        # pre-partitioned) base and re-project from it instead of joining —
+        # laid-out) base and re-project from it instead of joining —
         # keeps every screening round map-only over the cached partitions
         self._base: DataFrame = df
 
@@ -209,11 +209,6 @@ class FeatureFrame:
         if dup:
             raise ValueError(f"duplicate feature names in merge: {sorted(dup)[:5]}")
         merged_names = self.feature_names + other.feature_names
-        have = set(self.df.columns)
-        if all(c in have for c in other.feature_names):
-            # projections of a shared base: just widen the select
-            cols = [self.id_col, self.label_col, *merged_names]
-            return self._child(self.df.select(*[F.col(c) for c in cols]), merged_names)
         if self._base is other._base and all(
             c in self._base.columns for c in merged_names
         ):

@@ -50,9 +50,11 @@ from featurescreening_jl_spark.operators.importance import (
 )
 from featurescreening_jl_spark.operators.selection import make_rng
 
-__all__ = ["feature_importance_partitioned", "local_forest_split_counts"]
+__all__ = ["DEFAULT_ENSEMBLE_PARTITIONS", "ensemble_layout",
+           "feature_importance_partitioned", "local_forest_split_counts"]
 
 _MAX_BINS = 32
+DEFAULT_ENSEMBLE_PARTITIONS = 64  # fixed: independent of cluster size
 
 
 def _grow_tree(
@@ -174,15 +176,21 @@ def _resolved_cfg(config: Optional[dict[str, Any]], n_features: int,
     return cfg
 
 
+def ensemble_layout(df, id_col: str, num_partitions: int):
+    """The ensemble's row layout. Hash-partitioning on the id fixes WHICH
+    rows land in each partition, the sort fixes their ORDER (bootstrap
+    draws index rows by position): identical results at any core count.
+    Over a cache already in this layout the planner drops both operators."""
+    return df.repartition(num_partitions, id_col).sortWithinPartitions(id_col)
+
+
 def feature_importance_partitioned(
     ff: FeatureFrame,
     config: Optional[dict[str, Any]] = None,
     rng: Any = None,
     *,
-    num_partitions: int = 64,
+    num_partitions: int = DEFAULT_ENSEMBLE_PARTITIONS,
     trees_per_partition: Optional[int] = None,
-    pre_partitioned: bool = False,
-    transfer_dtype: str = "double",
 ) -> list[tuple[str, int]]:
     """Ranked ``(feature_name, split_count)`` via the partition ensemble.
 
@@ -191,19 +199,10 @@ def feature_importance_partitioned(
     given. Ranking contract matches the MLlib backend: count desc,
     original column position asc; never-split features absent.
 
-    ``pre_partitioned=True`` asserts the caller already shaped ``ff.df``
-    as ``repartition(num_partitions, id).sortWithinPartitions(id)`` (the
-    screening loop does this once when caching the base frame) — the
-    per-round training stage is then MAP-ONLY: a narrow projection of the
-    cached partitions straight into ``mapInPandas``, zero shuffles.
-
-    ``transfer_dtype="float"`` halves the JVM→Arrow→pandas transfer
-    volume of the training stage (its dominant cost once trees are cheap:
-    the stage is memory-bandwidth-bound, see BENCH/BASELINE.md stage
-    decomposition). The trees bin features to ≤32 quantile buckets
-    anyway, so float32 almost never moves a split; it CAN flip
-    quantile-edge ties, so results may differ from the float64 path —
-    deterministic either way, opt-in, default off.
+    The training input always gets :func:`ensemble_layout`. Over a cache
+    already in that layout with the same ``num_partitions`` (the screening
+    loop's base) the training stage is MAP-ONLY, zero shuffles; any other
+    input pays one exchange.
     """
     from pyspark.sql import functions as F
 
@@ -220,27 +219,15 @@ def feature_importance_partitioned(
     mapping = F.create_map(
         *[x for i, lbl in enumerate(labels) for x in (F.lit(lbl), F.lit(i))]
     )
-    # hash-repartition on the id fixes WHICH rows land in each partition;
-    # sortWithinPartitions fixes their ORDER (bootstrap draws index rows by
-    # position) — together: identical results at any core count
-    if transfer_dtype not in ("double", "float"):
-        raise ValueError(f"transfer_dtype must be double|float, got "
-                         f"{transfer_dtype!r}")
-    proj = ff.df.select(
-        F.col(ff.id_col),
-        mapping[F.col(ff.label_col)].alias("__y"),
-        *[F.col(c).cast(transfer_dtype) for c in names],
+    proj = ensemble_layout(
+        ff.df.select(
+            F.col(ff.id_col),
+            mapping[F.col(ff.label_col)].alias("__y"),
+            *[F.col(c).cast("double") for c in names],
+        ),
+        ff.id_col,
+        num_partitions,
     )
-    if pre_partitioned and proj.rdd.getNumPartitions() != num_partitions:
-        # the caller's "already repartition(num_partitions, id)-shaped"
-        # claim is VERIFIED, not trusted: a planner/AQE change that altered
-        # the partitioning would silently shift every per-partition RNG
-        # stream (round-1 advisor finding). Fall back to repartitioning.
-        pre_partitioned = False
-    if not pre_partitioned:
-        proj = proj.repartition(num_partitions, ff.id_col).sortWithinPartitions(
-            ff.id_col
-        )
 
     def train(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -262,8 +249,8 @@ def feature_importance_partitioned(
                 {"feature_idx": ks, "cnt": [counts[k] for k in ks]}
             )
 
-    # hint: repartition above fixes partition contents; the mapInPandas
-    # stage is map-only, the reduce below moves ≤ n_features rows/partition
+    # the layout fixes partition contents; the mapInPandas stage is
+    # map-only, the reduce below moves ≤ n_features rows/partition
     agg = (
         proj.mapInPandas(train, schema="feature_idx int, cnt long")
         .groupBy("feature_idx")

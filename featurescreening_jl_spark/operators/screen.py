@@ -22,11 +22,13 @@ import csv
 import logging
 import os
 from collections.abc import Callable
+from functools import partial
 from typing import Any, Optional
 
 import numpy as np
 
 from featurescreening_jl_spark.frame import FeatureFrame
+from featurescreening_jl_spark.operators import importance_dist
 from featurescreening_jl_spark.operators.importance import (
     DEFAULT_SCREEN_CONFIG,
     feature_importance,
@@ -64,7 +66,6 @@ def screen(
     dump_dir: Optional[str] = None,
     checkpoint: Any = None,
     resume_from: Optional[str] = None,
-    cache: bool = True,
     importance_backend: str = "spark_ml",
     backend_options: Optional[dict[str, Any]] = None,
     unpersist: bool = True,
@@ -91,11 +92,6 @@ def screen(
     - ``checkpoint`` — a ``RoundCheckpoint`` (sources.checkpoint); each
       round's survivor frame and lineage metrics are snapshotted, and
       ``resume_from`` re-enters the loop after the last completed round.
-    - ``cache`` — persist the base frame for the duration of the loop so
-      per-round fits don't re-derive its upstream lineage (featurization
-      windows, joins). Set False when the base table is too large to cache
-      — column pruning then bounds each round's scan to its
-      ≤ reduced_size + step_size columns instead.
     - ``importance_backend`` — ``"spark_ml"`` (default; MLlib fit,
       semantics-faithful) or ``"partitioned"`` (map-only partition
       ensemble, the near-linear-scaling path for huge inputs — see
@@ -107,6 +103,10 @@ def screen(
       the cache alive lets that consumption read ~reduced_size columns
       from memory instead of re-deriving the full featurization lineage;
       the cache then ages out via the session's LRU store.
+
+    The base frame is persisted for the loop (in ``ensemble_layout`` for
+    the ``partitioned`` backend, so every round's training is map-only
+    over the cache) and its labels are read once, before round 1.
     """
     if reduced_size is not None and selection_mode is not None:
         raise AssertionError(
@@ -159,26 +159,25 @@ def screen(
             log.info("resuming at round %d with %d survivors",
                      start_round, len(selected_names))
 
-    backend_opts = dict(backend_options or {})
-    if cache:
-        if importance_backend == "partitioned":
-            # shape the cached frame ONCE as the ensemble wants it
-            # (hash-partitioned + sorted on the id) so every round's
-            # training stage is map-only over the cache — no per-round
-            # shuffle, no per-round sort
-            n_ens = backend_opts.get("num_partitions", 64)
-            ff = FeatureFrame(
-                ff.df.repartition(n_ens, ff.id_col).sortWithinPartitions(
-                    ff.id_col
-                ),
-                ff.feature_names,
-                label_col=ff.label_col,
-                id_col=ff.id_col,
-            )
-            backend_opts.setdefault("num_partitions", n_ens)
-            backend_opts["pre_partitioned"] = True
-        ff.df.persist()
+    fit = feature_importance
+    if importance_backend == "partitioned":
+        # lay the cache out once as the ensemble wants it: the planner then
+        # elides the layout, so every round's training is map-only over it
+        backend_opts = dict(backend_options or {})
+        n_ens = backend_opts.setdefault(
+            "num_partitions", importance_dist.DEFAULT_ENSEMBLE_PARTITIONS
+        )
+        ff = FeatureFrame(
+            importance_dist.ensemble_layout(ff.df, ff.id_col, n_ens),
+            ff.feature_names, label_col=ff.label_col, id_col=ff.id_col,
+        )
+        fit = partial(importance_dist.feature_importance_partitioned,
+                      **backend_opts)
+    ff.df.persist()
+    ff.distinct_labels()  # once: every round's frame inherits the list
 
+    sc = ff.df.sparkSession.sparkContext
+    merged_cfg = {**DEFAULT_SCREEN_CONFIG, **(config or {})}
     n_rounds = len(parts)
     for i, part in enumerate(parts):
         if i < start_round:
@@ -195,25 +194,15 @@ def screen(
             np.random.default_rng(round_streams[2 * i]).integers(0, 2**31 - 1)
         )
 
-        spark = ff.df.sparkSession
-        spark.sparkContext.setJobDescription(
+        caller_description = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(
             f"screen round {i + 1}/{n_rounds}: fit forest over "
             f"{to_be_selected.n_features} features"
         )
-        merged_cfg = {**DEFAULT_SCREEN_CONFIG, **(config or {})}
-        if importance_backend == "partitioned":
-            from featurescreening_jl_spark.operators.importance_dist import (
-                feature_importance_partitioned,
-            )
-
-            importances = feature_importance_partitioned(
-                to_be_selected, config=merged_cfg, rng=fit_seed,
-                **backend_opts,
-            )
-        else:
-            importances = feature_importance(
-                to_be_selected, config=merged_cfg, rng=fit_seed,
-            )
+        try:
+            importances = fit(to_be_selected, config=merged_cfg, rng=fit_seed)
+        finally:
+            sc.setJobDescription(caller_description)
 
         if dump_dir is not None:
             os.makedirs(dump_dir, exist_ok=True)
@@ -240,7 +229,7 @@ def screen(
             )
 
     result = ff.select_features(selected_names)
-    if cache and unpersist:
+    if unpersist:
         ff.df.unpersist()
     return result
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from featurescreening_jl_spark.frame import FeatureFrame
 from featurescreening_jl_spark.functions.time import epoch_micros, epoch_seconds
 
 __all__ = [
@@ -30,6 +31,7 @@ __all__ = [
     "sessionize",
     "turn_features",
     "turn_sample_id",
+    "turn_feature_frame",
     "conversation_aggregates",
     "trailing_time_window",
     "trailing_time_features",
@@ -44,16 +46,11 @@ __all__ = [
 
 
 def turn_sample_id(conv_id="conv_id", turn_idx="turn_idx"):
-    """THE canonical per-turn sample id: a portable 60-bit hash of the
-    joint ``conv_id:turn_idx`` key string.
-
-    Single definition shared by the flagship pipeline
-    (``__spark_entry__``) and the CLI job (``jobs/screen_job.py``) so the
-    two paths cannot drift (round 2 had the CLI on an additive
-    ``xxhash64(conv_id) + turn_idx`` form, which both diverged from the
-    oracle-checked path and admits cross-key collisions:
-    ``hash(a) + i == hash(b) + j``). Hashing the delimited joint string
-    rules the additive collision class out, and the md5-based
+    """THE canonical per-turn sample id (used by :func:`turn_feature_frame`):
+    a portable 60-bit hash of the joint ``conv_id:turn_idx`` key string.
+    Hashing the delimited joint string rules out the cross-key collisions
+    of an additive ``xxhash64(conv_id) + turn_idx`` form
+    (``hash(a) + i == hash(b) + j``), and the md5-based
     ``hash60_portable`` keeps ids reproducible by external engines
     (DuckDB oracle)."""
     from featurescreening_jl_spark.operators.dedup import hash60_portable
@@ -61,6 +58,21 @@ def turn_sample_id(conv_id="conv_id", turn_idx="turn_idx"):
     return hash60_portable(
         F.concat_ws(":", F.col(conv_id), F.col(turn_idx).cast("string"))
     )
+
+
+def turn_feature_frame(transcripts: DataFrame,
+                       gap_seconds: int = 1800) -> FeatureFrame:
+    """THE labelled per-turn frame the flagship, the CLI job and the benches
+    screen: ``sample_id`` = :func:`turn_sample_id`, ``label`` = ``tool``
+    when the next turn calls a tool (else ``no_tool``), and the
+    :data:`TURN_FEATURE_COLS`; the text never enters the window shuffle."""
+    feats = turn_features(transcripts, gap_seconds, keep_text=False).select(
+        turn_sample_id().alias("sample_id"),
+        F.when(F.col("label_next_is_tool") > 0, "tool")
+        .otherwise("no_tool").alias("label"),
+        *TURN_FEATURE_COLS,
+    )
+    return FeatureFrame(feats, TURN_FEATURE_COLS)
 
 
 def turn_order_window(

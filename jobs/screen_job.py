@@ -114,9 +114,7 @@ def main(argv=None) -> None:
 
     if args.from_transcripts:
         from featurescreening_jl_spark.operators.window_features import (
-            TURN_FEATURE_COLS,
-            turn_features,
-            turn_sample_id,
+            turn_feature_frame,
         )
 
         raw = (
@@ -128,16 +126,9 @@ def main(argv=None) -> None:
             # split BEFORE featurization on conv_id — the leakage
             # boundary: every turn of a conversation lands on one side.
             raw = _split_out_holdout(args, raw, key_col="conv_id")
-        # sample_id: the canonical shared definition (turn_sample_id) —
-        # byte-identical to the flagship pipeline's oracle-checked ids.
-        feats = turn_features(raw, gap_seconds=args.sessionize_gap).select(
-            turn_sample_id().alias("sample_id"),
-            F.when(F.col("label_next_is_tool") > 0, "tool")
-            .otherwise("no_tool")
-            .alias("label"),
-            *[F.col(c) for c in TURN_FEATURE_COLS],
-        )
-        ff = FeatureFrame(feats, TURN_FEATURE_COLS)
+        # the canonical labelled turn frame — ids byte-identical to the
+        # flagship pipeline's oracle-checked ones
+        ff = turn_feature_frame(raw, gap_seconds=args.sessionize_gap)
     else:
         ff = FeatureFrame.load(spark, args.input, label_col=args.label_col,
                                id_col=args.id_col)

@@ -14,6 +14,7 @@ from collections import Counter
 
 from featurescreening_jl_spark.frame import FeatureFrame
 from featurescreening_jl_spark.operators.importance_dist import (
+    ensemble_layout,
     feature_importance_partitioned,
     local_forest_split_counts,
 )
@@ -110,28 +111,61 @@ class TestPartitionedImportance:
         assert result.count() == 600
 
 
-class TestPlanShape:
-    def test_pre_partitioned_training_is_map_only(self, spark):
-        """With pre_partitioned=True the projection feeding mapInPandas must
-        add NO exchange: shuffle count of the plan equals the shuffle count
-        of the pre-shaped input (one, from the explicit repartition)."""
-        from pyspark.sql import functions as F
+def _record_training_inputs(monkeypatch, df) -> list[str]:
+    """Executed plan of every DataFrame handed to ``mapInPandas`` — the
+    training stage's input — captured at call time, while the loop cache
+    is still registered."""
+    cls = type(df)
+    original = cls.mapInPandas
+    plans: list[str] = []
 
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return original(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInPandas", recording)
+    return plans
+
+
+def _above_cache(plan: str) -> str:
+    """The operators planned above the cache scan (the tree string lists
+    the root first; the cached plan's own exchange sits below the scan)."""
+    assert "InMemoryTableScan" in plan
+    return plan.split("InMemoryTableScan")[0]
+
+
+class TestPlanShape:
+    def test_screen_training_is_map_only(self, spark, monkeypatch):
+        """screen() lays its loop cache out once; every round's training
+        input is then a narrow projection of the cache — no Exchange, no
+        Sort above the scan."""
+        ff = _separable_frame(spark, noise_cols=7)
+        plans = _record_training_inputs(monkeypatch, ff.df)
+        screen(
+            ff, reduced_size=2, step_size=3, config=CFG, rng=42,
+            show_progress=False, importance_backend="partitioned",
+            backend_options={"num_partitions": 8},
+        )
+        assert len(plans) == 3  # ceil(8 / 3) rounds
+        for plan in plans:
+            above = _above_cache(plan)
+            assert above.count("Exchange") == 0, plan
+            assert above.count("Sort [") == 0, plan
+
+    def test_other_partition_count_plans_one_exchange(self, spark,
+                                                      monkeypatch):
         ff = _separable_frame(spark)
-        shaped = FeatureFrame(
-            ff.df.repartition(8, "sample_id").sortWithinPartitions("sample_id"),
-            ff.feature_names,
-        )
-        labels = shaped.distinct_labels()
-        mapping = F.create_map(
-            *[x for i, lbl in enumerate(labels) for x in (F.lit(lbl), F.lit(i))]
-        )
-        proj = shaped.df.select(
-            mapping[F.col("label")].alias("__y"),
-            *[F.col(c).cast("double") for c in shaped.feature_names],
-        )
-        plan = proj._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 1  # only the explicit repartition
+        base = ensemble_layout(ff.df, ff.id_col, 8).persist()
+        try:
+            plans = _record_training_inputs(monkeypatch, base)
+            feature_importance_partitioned(
+                FeatureFrame(base, ff.feature_names), config=CFG, rng=7,
+                num_partitions=4,
+            )
+            assert len(plans) == 1
+            assert _above_cache(plans[0]).count("Exchange") == 1, plans[0]
+        finally:
+            base.unpersist()
 
 
 class TestBackendAgreement:
@@ -145,41 +179,3 @@ class TestBackendAgreement:
 
         ml = feature_importance(ff, config=CFG, rng=5)
         assert dist[0][0] == ml[0][0] == "sig"
-
-
-class TestTransferDtype:
-    def test_float_transfer_same_ranking_shape(self, spark):
-        # float32 halves Arrow transfer; on well-separated data the
-        # ranking must match the float64 path (quantile-edge ties could
-        # differ in general — documented, opt-in)
-        import numpy as np
-
-        from featurescreening_jl_spark.frame import FeatureFrame
-        from featurescreening_jl_spark.operators.importance_dist import (
-            feature_importance_partitioned,
-        )
-
-        rng = np.random.default_rng(2)
-        X = rng.standard_normal((300, 6))
-        X[:, 4] += np.repeat([0.0, 5.0], 150)
-        ff = FeatureFrame.from_xy(spark, X, np.repeat(["a", "b"], 150))
-        cfg = {"n_trees": 64, "max_depth": 6}
-        r64 = feature_importance_partitioned(
-            ff, config=cfg, rng=3, num_partitions=8)
-        r32 = feature_importance_partitioned(
-            ff, config=cfg, rng=3, num_partitions=8, transfer_dtype="float")
-        assert r64[0][0] == r32[0][0] == "5"
-        assert [n for n, _ in r64] == [n for n, _ in r32]
-
-    def test_rejects_bad_dtype(self, spark):
-        import numpy as np
-
-        from featurescreening_jl_spark.frame import FeatureFrame
-        from featurescreening_jl_spark.operators.importance_dist import (
-            feature_importance_partitioned,
-        )
-
-        ff = FeatureFrame.from_xy(
-            spark, np.zeros((20, 2)), ["a"] * 10 + ["b"] * 10)
-        with pytest.raises(ValueError, match="transfer_dtype"):
-            feature_importance_partitioned(ff, transfer_dtype="int")

@@ -124,6 +124,71 @@ class TestScreenBasics:
         assert header == "feature,importance"
 
 
+class TestScreenLoopHygiene:
+    def test_labels_scanned_once_per_screen(self, feature_frame,
+                                            monkeypatch):
+        scans = []
+        original = FeatureFrame.distinct_labels
+
+        def counting(self):
+            if self._labels_cache is None:
+                scans.append(self)
+            return original(self)
+
+        monkeypatch.setattr(FeatureFrame, "distinct_labels", counting)
+        fresh = FeatureFrame(feature_frame.df, feature_frame.feature_names)
+        calls = {"rounds": 0}
+        screen(
+            fresh, reduced_size=3, step_size=4,
+            config=fixture_screen_config(), rng=1, show_progress=False,
+            importance_backend="partitioned",
+            backend_options={"num_partitions": 4},
+            after=lambda sel: calls.__setitem__("rounds", calls["rounds"] + 1),
+        )
+        assert calls["rounds"] == 3  # ceil(11 / 4)
+        assert len(scans) == 1
+
+    def test_job_description_restored(self, feature_frame):
+        sc = feature_frame.df.sparkSession.sparkContext
+        sc.setJobDescription("caller job")
+        try:
+            screen(
+                feature_frame, reduced_size=3, step_size=4,
+                config=fixture_screen_config(), rng=1, show_progress=False,
+                importance_backend="partitioned",
+                backend_options={"num_partitions": 4},
+            )
+            assert sc.getLocalProperty("spark.job.description") == "caller job"
+        finally:
+            sc.setJobDescription(None)
+
+
+class TestMerge:
+    def test_unrelated_frame_keeps_its_own_values(self, spark):
+        left = spark.createDataFrame(
+            [(1, "a", 1.0, 10.0), (2, "b", 2.0, 20.0)],
+            "sample_id long, label string, x double, y double",
+        )
+        right = spark.createDataFrame(
+            [(1, "a", -1.0), (2, "b", -2.0)],
+            "sample_id long, label string, y double",
+        )
+        merged = FeatureFrame(left, ["x"]).merge(FeatureFrame(right, ["y"]))
+        pdf = merged.to_pandas()
+        assert merged.names == ["x", "y"]
+        assert pdf["y"].tolist() == [-1.0, -2.0]
+        assert pdf["x"].tolist() == [1.0, 2.0]
+
+    def test_projections_of_one_base_do_not_join(self, feature_frame):
+        a = feature_frame.select_features(["01", "02"])
+        b = feature_frame.select_features(["05"])
+        merged = a.merge(b)
+        assert merged.names == ["01", "02", "05"]
+        plan = merged.df._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan
+        assert merged.count() == 25
+
+
 class TestScreenSeparability:
     def test_noise_features_screened_out(self, spark):
         """Signal columns beat injected pure-noise columns — the property the

@@ -152,15 +152,10 @@ def test_binds_to_turn_feature_frame(spark):
     import __spark_entry__ as e
     from featurescreening_jl_spark.operators.window_features import (
         TURN_FEATURE_COLS,
-        turn_features,
+        turn_feature_frame,
     )
-    from pyspark.sql import functions as F
 
-    t = e._transcripts(spark, sf)
-    feats = turn_features(t, keep_text=False).withColumn(
-        "label",
-        F.when(F.col("label_next_is_tool") > 0, "tool").otherwise("no_tool"),
-    )
+    feats = turn_feature_frame(e._transcripts(spark, sf)).df
     ranked = chi2_mi_ranking(feats, TURN_FEATURE_COLS, n_bins=8).collect()
     assert len(ranked) == len(TURN_FEATURE_COLS)
     assert all(r["chi2"] is not None for r in ranked)

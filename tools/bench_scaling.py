@@ -36,11 +36,13 @@ TMP = os.path.join(REPO, ".bench_tmp")
 WORKER = r"""
 import json, sys, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import functions as F
 from featurescreening_jl_spark.plans.session import get_spark
-from featurescreening_jl_spark import FeatureFrame, screen
+from featurescreening_jl_spark import screen
+from featurescreening_jl_spark.operators.importance_dist import (
+    DEFAULT_ENSEMBLE_PARTITIONS,
+)
 from featurescreening_jl_spark.operators.window_features import (
-    TURN_FEATURE_COLS, turn_features, turn_sample_id,
+    turn_feature_frame,
 )
 
 parallelism = {parallelism}
@@ -52,17 +54,10 @@ transcripts = spark.read.parquet({data!r})
 n_turns = transcripts.count()
 
 def run_once():
-    # keep_text=False: the raw text column (~10× the feature row width)
-    # never enters the window shuffle — the same change a 100 TB run needs
-    feats = turn_features(transcripts, keep_text=False).select(
-        turn_sample_id().alias("sample_id"),
-        F.when(F.col("label_next_is_tool") > 0, "tool").otherwise("no_tool")
-            .alias("label"),
-        *[F.col(c) for c in TURN_FEATURE_COLS],
-    )
-    ff = FeatureFrame(feats, TURN_FEATURE_COLS)
+    # turn_feature_frame keeps the raw text column (~10× the feature row
+    # width) out of the window shuffle — the same change a 100 TB run needs
     result = screen(
-        ff, reduced_size=4, step_size=5,
+        turn_feature_frame(transcripts), reduced_size=4, step_size=5,
         # n_trees = the reference's production default
         # (/root/reference/src/FeatureScreening.jl:54-61): the training
         # stage then measures compute, not task-latency floors
@@ -70,7 +65,7 @@ def run_once():
                  "min_purity_increase": 0.0}},
         rng=42, show_progress=False,
         importance_backend="partitioned",
-        backend_options={{"num_partitions": 64}},
+        backend_options={{"num_partitions": DEFAULT_ENSEMBLE_PARTITIONS}},
     )
     result.df.write.format("noop").mode("overwrite").save()
 

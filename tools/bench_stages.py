@@ -8,8 +8,8 @@ tools/bench_scaling.py):
 - ``featurize``: the windowed turn featurization (one conv_id window
   shuffle, text dropped map-side) materialized to the noop sink;
 - ``train``: ONE full-tree-budget round of the partitioned importance
-  backend over a cached pre-partitioned frame — the map-only stage that
-  dominates screening at the reference's 1000-tree budget.
+  backend over a cached frame in the ensemble layout — the map-only stage
+  that dominates screening at the reference's 1000-tree budget.
 
 Per-stage scaling efficiency localizes any end-to-end gap: a stage that
 scales at 0.9 while the composite sits lower points at the other stage
@@ -36,14 +36,14 @@ TMP = os.path.join(REPO, ".bench_tmp_stages")
 WORKER = r"""
 import json, sys, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import functions as F
 from featurescreening_jl_spark.plans.session import get_spark
 from featurescreening_jl_spark import FeatureFrame
 from featurescreening_jl_spark.operators.importance_dist import (
+    DEFAULT_ENSEMBLE_PARTITIONS, ensemble_layout,
     feature_importance_partitioned,
 )
 from featurescreening_jl_spark.operators.window_features import (
-    TURN_FEATURE_COLS, turn_features, turn_sample_id,
+    turn_feature_frame,
 )
 
 parallelism = {parallelism}
@@ -54,16 +54,9 @@ spark.sparkContext.setLogLevel("ERROR")
 transcripts = spark.read.parquet({data!r})
 n_turns = transcripts.count()
 
-def featurized():
-    return turn_features(transcripts, keep_text=False).select(
-        turn_sample_id().alias("sample_id"),
-        F.when(F.col("label_next_is_tool") > 0, "tool").otherwise("no_tool")
-            .alias("label"),
-        *[F.col(c) for c in TURN_FEATURE_COLS],
-    )
-
 def run_featurize():
-    featurized().write.format("noop").mode("overwrite").save()
+    turn_feature_frame(transcripts).df.write.format("noop").mode(
+        "overwrite").save()
 
 # ---- stage 1: featurize (warm-up rep, then timed rep) ----
 run_featurize()
@@ -71,24 +64,20 @@ t0 = time.perf_counter()
 run_featurize()
 t_featurize = time.perf_counter() - t0
 
-# ---- stage 2: one full-budget training round over the cached,
-# pre-partitioned frame (exactly the screening loop's shape) ----
-num_partitions = 64
-base = (
-    featurized()
-    .repartition(num_partitions, "sample_id")
-    .sortWithinPartitions("sample_id")
-    .cache()
-)
+# ---- stage 2: one full-budget training round over the cached frame in
+# the ensemble layout (exactly the screening loop's shape) ----
+turns = turn_feature_frame(transcripts)
+base = ensemble_layout(
+    turns.df, "sample_id", DEFAULT_ENSEMBLE_PARTITIONS
+).cache()
 base.count()  # cache fill (excluded: amortized across all rounds)
-ff = FeatureFrame(base, TURN_FEATURE_COLS)
+ff = FeatureFrame(base, turns.feature_names)
 cfg = {{"n_trees": {n_trees}, "max_depth": 8, "min_samples_leaf": 10,
         "min_purity_increase": 0.0}}
 
 def run_train():
     feature_importance_partitioned(
-        ff, config=cfg, rng=42, num_partitions=num_partitions,
-        pre_partitioned=True,
+        ff, config=cfg, rng=42, num_partitions=DEFAULT_ENSEMBLE_PARTITIONS,
     )
 
 run_train()

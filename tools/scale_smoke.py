@@ -80,27 +80,18 @@ def main() -> int:
 
     # 2. partitioned importance deterministic across parallelism is
     # covered by tests; here: determinism across two RUNS at scale
-    from featurescreening_jl_spark import FeatureFrame
     from featurescreening_jl_spark.operators.importance_dist import (
         feature_importance_partitioned,
     )
     from featurescreening_jl_spark.operators.window_features import (
-        TURN_FEATURE_COLS, turn_features,
+        turn_feature_frame,
     )
 
-    feats = turn_features(t, keep_text=False).select(
-        (F.xxhash64("conv_id") + F.col("turn_idx")).alias("sample_id"),
-        F.when(F.col("label_next_is_tool") > 0, "tool")
-        .otherwise("no_tool").alias("label"),
-        *[F.col(c) for c in TURN_FEATURE_COLS],
-    )
-    ff = FeatureFrame(feats, TURN_FEATURE_COLS)
+    ff = turn_feature_frame(t)
     cfg = {"n_trees": 256, "max_depth": 8, "min_samples_leaf": 10,
            "min_purity_increase": 0.0}
-    r1 = feature_importance_partitioned(ff, config=cfg, rng=42,
-                                        num_partitions=64)
-    r2 = feature_importance_partitioned(ff, config=cfg, rng=42,
-                                        num_partitions=64)
+    r1 = feature_importance_partitioned(ff, config=cfg, rng=42)
+    r2 = feature_importance_partitioned(ff, config=cfg, rng=42)
     results["importance_deterministic"] = r1 == r2
     results["importance_top3"] = [name for name, _ in r1[:3]]
 
