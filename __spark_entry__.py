@@ -5769,8 +5769,11 @@ def _bpe_encode_oracle(merges) -> str:
     the word's encoding; documents reassemble by word position.
     '|' is a safe pair-key delimiter: symbols only contain [a-z0-9']
     and the '</w>' sentinel. NOTE: DuckDB's list_position returns 0
-    (not NULL) for absent elements — the > 0 filters are load-bearing."""
-    pair_list = "[" + ",".join(f"'{l}|{r}'" for l, r in merges) + "]"
+    (not NULL) for absent elements — the > 0 filters are load-bearing.
+    Symbols may contain ', so each pair literal doubles its quotes."""
+    pair_list = "[" + ",".join(
+        "'" + f"{l}|{r}".replace("'", "''") + "'" for l, r in merges
+    ) + "]"
     return f"""
         WITH RECURSIVE
         wd AS (

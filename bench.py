@@ -1,4 +1,5 @@
-"""Benchmark harness: headline queries at sf0.1.
+"""Benchmark harness: every registered driver query (``queries()`` in
+``__spark_entry__.py``) at sf0.1.
 
 Prints ONE JSON line:
 ``{"metric": ..., "value": <total sec>, "unit": "sec",
@@ -30,161 +31,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-HEADLINE = [
-    "projection",
-    "column_merge_join",
-    "hash_count_agg",
-    "topk",
-    "select_top_fraction",
-    "lag_lead_window",
-    "sessionize",
-    "running_agg",
-    "asof_join_window",
-    "asof_join_bucketed",
-    "multi_agg_rollup",
-    "asof_join_merge",
-    "dedup_exact",
-    "text_stats",
-    "cosine_topk",
-    "minhash_pairs",
-    "transcripts_turn_features",
-    "transcripts_conversation_agg",
-    "transcripts_asof_backfill",
-    "doc_quality",
-    "language_id",
-    "ngram_jaccard",
-    "ngram_jaccard_indexed",
-    "simhash_dedup",
-    "dedup_cc",
-    "simhash_neardup",
-    "lsh_topk",
-    "media_features",
-    "screen_pipeline",
-    # round 3: every oracle-checked query gets a perf baseline — a
-    # regression in any driver query must be visible in BENCH_r*.json
-    "lang_distribution",
-    "fingerprint_distinct",
-    "transcripts_shape",
-    "cosine_neardup",
-    "media_frame_sample",
-    "dedup_cc_star",
-    "ivf_topk",
-    "hash_split",
-    "stratified_sample",
-    "per_key_cap",
-    "weighted_mix",
-    "trailing_time",
-    "tfidf_top_terms",
-    "winnow_fingerprints",
-    "winnow_pairs",
-    "repetition_stats",
-    "contamination",
-    "weighted_reservoir",
-    "pii_redaction",
-    "conv_truncate",
-    "conv_validity",
-    "quality_score",
-    "json_facets",
-    "range_join",
-    "kmv_distinct",
-    "pivot_counts",
-    "pack_greedy",
-    "pack_offset",
-    "token_budget_mix",
-    "keep_best",
-    "corpus_prep",
-    "chat_render",
-    "doc_chunks",
-    "token_histogram",
-    "length_quantiles",
-    "lm_score",
-    "minhash_incremental",
-    # round 4: corpus-prep composition pieces + PIT encoders + profiling
-    "mask_boilerplate",
-    "semantic_dedup",
-    "target_encode",
-    "decayed_features",
-    "decayed_features_arrow",
-    "rolling_folds",
-    "skew_profile",
-    "psi_drift",
-    "heavy_hitters",
-    "sft_pairs",
-    "oof_target_encode",
-    "project_embeddings",
-    "bm25",
-    "bpe_vocab",
-    "bpe_encode",
-    "role_transitions",
-    "temperature_mix",
-    "session_funnel",
-    "dsir_weights",
-    "strip_markup",
-    "kmv_overlap",
-    "expanding_zscore",
-    "trailing_slope",
-    "expanding_rank",
-    "pmi_bigrams",
-    "pq_topk",
-    "ivfpq_topk",
-    "normalize_embeddings",
-    "woe_encode",
-    "robust_outliers",
-    "hashed_cross",
-    "robust_outliers_by",
-    "forward_label",
-    "session_stats",
-    "hash_negatives",
-    # round 4 (this round): span dedup + filter-method screening stats
-    "substring_spans",
-    "chi2_ranking",
-    "feature_corr",
-    "perplexity_buckets",
-    "conv_neardup",
-    "snapshot_diff",
-    "quality_classifier",
-    "conv_packing",
-    "loop_detection",
-    "merge_turns",
-    "turn_edit_dist",
-    "entropy_features",
-    "preference_pairs",
-    "leakage_split",
-    "response_latency",
-    "tool_usage",
-    "context_budget",
-    "soft_dedup",
-    "pool_embeddings",
-    "curriculum",
-    "semantic_segments",
-    "doc_pagerank",
-    "quantile_bin",
-    "dq_profile",
-    "dq_checks",
-    "cohort_retention",
-    "fuzzy_join",
-    "calibration",
-    "corpus_cube",
-    "ks_drift",
-    "contamination_bitmap",
-    "kmeans_cells",
-    "embedding_drift",
-    "exact_stratified",
-    "encoding_quality",
-    "asof_leakage_audit",
-    "label_propagation",
-    "dedup_cluster_sizes",
-    "dedup_exact_incremental",
-    # round 5: the quality classifier's deterministic scoring half
-    # (frozen model, map-only) — the fit half stays in quality_classifier
-    "quality_classifier_score",
-    # round 5: the mega-conversation chunked hatches at real multi-chunk
-    # geometry (identical outputs to their single-task twins)
-    "context_budget_chunked",
-    "sft_pairs_chunked",
-    "turn_edit_chunked",
-]
 
 
 def materialize(df) -> None:
@@ -244,7 +90,7 @@ def main() -> None:
         materialize(spark.read.parquet(f"{SF_DIR}/{t}.parquet"))
 
     # optional argv subset for iteration: `python bench.py q1 q2 ...`
-    names = [a for a in sys.argv[1:] if not a.startswith("-")] or HEADLINE
+    names = [a for a in sys.argv[1:] if not a.startswith("-")] or list(qs)
     # INTERLEAVED repetitions, per-query MIN. This sandbox host shows
     # minutes-long co-tenant bursts (steal + lock-holder-preemption system
     # time) that inflate whichever queries happen to run inside the burst

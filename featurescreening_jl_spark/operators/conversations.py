@@ -73,8 +73,9 @@ def _chunked_prefix_with_ghosts(
     required for the offsets) also carries (count, min pos, max pos),
     and an ``assert_true`` on the offset column fails the job loudly if
     any chunk has in-chunk gaps, a shifted start, or a short non-final
-    chunk — sparse numbering would otherwise thin the ghost overlap
-    below the frame span and silently corrupt results.
+    chunk, or if a whole chunk is missing — sparse numbering would
+    otherwise thin the ghost overlap below the frame span and silently
+    corrupt results.
     """
     if overlap_rows > chunk_turns:
         raise ValueError(
@@ -99,6 +100,7 @@ def _chunked_prefix_with_ghosts(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w_last = Window.partitionBy(by)
+    w_prev = Window.partitionBy(by).orderBy("__ck")
     per_chunk = local.groupBy(by, "__ck").agg(
         F.sum(value_col).alias("__csum"),
         F.count(F.lit(1)).alias("__cnt"),
@@ -112,6 +114,9 @@ def _chunked_prefix_with_ghosts(
             (F.col("__ck") == F.max("__ck").over(w_last))
             | (F.col("__pmax") == F.lit(int(chunk_turns - 1)))
         )
+        & F.coalesce(
+            F.lag("__ck").over(w_prev) == F.col("__ck") - 1, F.lit(True)
+        )
     )
     offsets = per_chunk.select(
         by,
@@ -124,9 +129,9 @@ def _chunked_prefix_with_ghosts(
                 dense_ok,
                 f"{what}: chunk_turns requires dense 0-based "
                 f"{order_col} numbering per conversation (found an "
-                f"in-chunk gap, shifted start, or short non-final "
-                f"chunk) — the ghost overlap would under-cover the "
-                f"lookback frame",
+                f"in-chunk gap, shifted start, short non-final chunk, "
+                f"or missing chunk) — the ghost overlap would "
+                f"under-cover the lookback frame",
             ).isNull(),
             F.coalesce(F.sum("__csum").over(wch), F.lit(0)),
         ).alias("__off"),

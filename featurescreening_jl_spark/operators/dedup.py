@@ -211,41 +211,26 @@ def shingles_hashed(text, n: int = 3):
     ``transform(shingles(text, n), xxhash64)`` up to hash collisions —
     tokens are split on whitespace, so token n-tuples and their joined
     strings are in bijection — but the VALUES differ from hashing the
-    joined string, so don't mix the two within one LSH index.
+    joined string, so don't mix the two within one LSH index. A text
+    with fewer than ``n`` tokens yields one shingle: ``try_element_at``
+    gives NULL past the end and ``xxhash64`` skips NULL arguments, so it
+    hashes the tokens it has (the string path's single short shingle).
 
     This is the materialization half of ``minhash_lsh_pairs``'s
     ``hashed_verify`` tier: on long rendered conversations the joined
     shingle strings are ~75% of the bytes the stage allocates; hashing
     the slices directly measured ~1.5× on the shingle stage at sf0.1.
     """
-    if n != 3:
-        def grams_of(tk):
-            idx = F.sequence(
-                F.lit(0), F.greatest(F.size(tk) - n, F.lit(0))
+    def grams_of(tk):
+        idx = F.sequence(F.lit(0), F.greatest(F.size(tk) - n, F.lit(0)))
+        return F.array_distinct(
+            F.transform(
+                idx,
+                lambda i: F.xxhash64(
+                    *[F.try_element_at(tk, i + j + 1) for j in range(n)]
+                ),
             )
-            return F.array_distinct(
-                F.transform(
-                    idx,
-                    lambda i: F.xxhash64(
-                        *[F.element_at(tk, i + j + 1) for j in range(n)]
-                    ),
-                )
-            )
-    else:
-        def grams_of(tk):
-            idx = F.sequence(
-                F.lit(0), F.greatest(F.size(tk) - 3, F.lit(0))
-            )
-            return F.array_distinct(
-                F.transform(
-                    idx,
-                    lambda i: F.xxhash64(
-                        F.element_at(tk, i + 1),
-                        F.element_at(tk, i + 2),
-                        F.element_at(tk, i + 3),
-                    ),
-                )
-            )
+        )
 
     toks = F.split(_norm(text), " ")
     return F.element_at(F.transform(F.array(toks), grams_of), 1)
@@ -370,9 +355,11 @@ def minhash_lsh_pairs(
     two-tier shape as ``ngram_jaccard_pairs_indexed``'s round-4 fix:
     (1) store/band/screen in 64-bit HASH space — the materialized
     shingle state is ``array<long>`` (~4× narrower than strings for
-    word 3-grams), signatures are bit-identical to the string path
-    (level 1 is the same ``xxhash64``), and every banding candidate is
-    screened by Jaccard over the hashed sets at
+    word 3-grams), and signatures come from ``shingles_hashed``. That
+    hashes token tuples, not joined strings, so its shingle sets match
+    the string path's one to one but the signature VALUES differ (bands
+    and buckets are not interchangeable with the exact path's). Every
+    banding candidate is screened by Jaccard over the hashed sets at
     ``threshold - screen_margin`` — then (2) recompute STRING shingles
     for the screened survivors only (ids semi-joined back to the input,
     broadcast — survivors ≈ true pairs, orders of magnitude below
@@ -554,8 +541,10 @@ def minhash_lsh_pairs_incremental(
     Returns ``(new_id, index_id, jaccard)``: every (new doc, index doc)
     pair whose true shingle Jaccard is ≥ ``jaccard_threshold``, found via
     the SAME banding scheme as :func:`minhash_lsh_pairs` (shared
-    :func:`_band_table`, so a pair that collides in the self-join setting
-    collides here by construction) and then exactly verified.
+    :func:`_band_table` over string shingles, so a pair that collides in
+    a ``hashed_verify=False`` self-join collides here by construction;
+    the ``hashed_verify=True`` self-join bands different hash values, so
+    its buckets do not carry over) and then exactly verified.
 
     Scale shape: in production the index's banded table is the
     precomputed artifact (computed once per corpus version, stored

@@ -90,7 +90,8 @@ def screen(
       ``importances.<i>.csv`` (reference @dump,
       /root/reference/src/FeatureScreening.jl:164).
     - ``checkpoint`` — a ``RoundCheckpoint`` (sources.checkpoint); each
-      round's survivor frame and lineage metrics are snapshotted, and
+      round's survivor frame is snapshotted and its row count and ranking
+      appended to a lineage record, and
       ``resume_from`` re-enters the loop after the last completed round.
     - ``importance_backend`` — ``"spark_ml"`` (default; MLlib fit,
       semantics-faithful) or ``"partitioned"`` (map-only partition

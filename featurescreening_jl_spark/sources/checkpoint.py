@@ -5,26 +5,28 @@ Engine-grade version of the reference CLI's per-pass HDF5 snapshots
 resume): every completed round writes
 
 - the survivor feature frame   → ``<root>/rounds/round=NNNN/data``
-- the full importance ranking  → ``<root>/rounds/round=NNNN/importances``
-- a lineage record             → appended to ``<root>/_lineage``
-  (round, survivor names, row count, per-partition row counts, wall time)
+- a lineage record             → one JSON line appended to
+  ``<root>/lineage.jsonl`` (round, row count, survivor names, the full
+  importance ranking, wall time, timestamp)
 - driver state                 → ``<root>/state.json`` (atomic rename)
 
+One round costs ONE Spark job: the survivor write carries an
+``Observation`` that counts its rows, so the record needs no second scan.
+The record and the state are metadata-sized and written with plain file
+I/O on the driver, so ``root`` must be a driver-local path.
+
 ``screen(..., checkpoint=ckpt, resume_from=root)`` re-enters the loop after
-the last completed round with the recorded survivor set; per-round seed
-streams are pre-spawned in ``screen`` so the resumed run replays identical
-randomness.
+the last completed round with the recorded survivor set (resume reads only
+``state.json``); per-round seed streams are pre-spawned in ``screen`` so the
+resumed run replays identical randomness.
 
 Storage backend: a parquet directory tree by default; when the session has
 the ``graft`` Iceberg catalog configured (sources/iceberg.py — requires the
-runtime jar, absent in this sandbox), each round's survivor frame and
-importance ranking are ALSO committed as Iceberg tables
-(``ckpt_<ns>.round_NNNN_data`` / ``_importances`` via
+runtime jar, absent in this sandbox), each round's survivor frame is ALSO
+committed as an Iceberg table (``ckpt_<ns>.round_NNNN_data`` via
 ``writeTo(...).createOrReplace()``): one screening round = one atomic
 Iceberg snapshot, replacing the parquet path's state.json rename dance
-(SURVEY.md §7.3 hard part 5). Driver state + lineage JSON stay on the
-local tree either way — they are metadata-sized and are what ``resume``
-reads.
+(SURVEY.md §7.3 hard part 5).
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ import os
 import time
 from typing import Any, Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["RoundCheckpoint"]
@@ -44,12 +46,10 @@ class RoundCheckpoint:
     def __init__(
         self,
         root: str,
-        spark: Optional[SparkSession] = None,
         *,
         iceberg_namespace: Optional[str] = None,
     ) -> None:
         self.root = root
-        self.spark = spark
         # Iceberg table namespace for round snapshots; defaults to a name
         # derived from the root dir. Only used when the live session has
         # the catalog configured (iceberg_active).
@@ -57,7 +57,6 @@ class RoundCheckpoint:
             "ckpt_" + os.path.basename(os.path.normpath(root)).replace("-", "_")
         )
         os.makedirs(root, exist_ok=True)
-        self._round_times: dict[int, float] = {}
         self._t_last = time.perf_counter()
 
     # -- paths ---------------------------------------------------------------
@@ -71,31 +70,25 @@ class RoundCheckpoint:
 
     @property
     def lineage_path(self) -> str:
-        return os.path.join(self.root, "_lineage")
+        return os.path.join(self.root, "lineage.jsonl")
 
     # -- write side (called by screen() after each round) ---------------------
 
     def save_round(self, i: int, selected, importances) -> None:
         from featurescreening_jl_spark.frame import FeatureFrame
-
-        assert isinstance(selected, FeatureFrame)
-        spark = selected.df.sparkSession
-        rdir = self._round_dir(i)
-        selected.save(os.path.join(rdir, "data"))
-
-        imp_df = spark.createDataFrame(
-            [(str(n), int(c)) for n, c in importances],
-            "feature string, importance long",
-        )
-        imp_df.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(rdir, "importances")
-        )
-
         from featurescreening_jl_spark.sources.iceberg import (
             iceberg_active,
             write_table,
         )
 
+        assert isinstance(selected, FeatureFrame)
+        rows = Observation()
+        selected._child(
+            selected.df.observe(rows, F.count(F.lit(1)).alias("n")),
+            selected.names,
+        ).save(os.path.join(self._round_dir(i), "data"))
+
+        spark = selected.df.sparkSession
         if iceberg_active(spark):
             # one round = one atomic Iceberg snapshot (createOrReplace)
             ns = self.iceberg_namespace
@@ -103,30 +96,20 @@ class RoundCheckpoint:
             write_table(
                 selected.df.select(*cols), f"{ns}.round_{i:04d}_data"
             )
-            write_table(imp_df, f"{ns}.round_{i:04d}_importances")
 
-        # per-partition row counts — the lineage/metrics record
-        part_counts = (
-            selected.df.select(F.spark_partition_id().alias("pid"))
-            .groupBy("pid")
-            .count()
-            .collect()
-        )
-        n_rows = sum(r["count"] for r in part_counts)
         elapsed = time.perf_counter() - self._t_last
         self._t_last = time.perf_counter()
-        lineage_row = {
+        record = {
             "round": i,
-            "n_rows": n_rows,
+            "n_rows": rows.get["n"],
             "n_features": selected.n_features,
             "features": selected.names,
-            "partition_rows": {str(r["pid"]): r["count"] for r in part_counts},
+            "importances": [[str(n), int(c)] for n, c in importances],
             "wall_sec": round(elapsed, 3),
             "ts": time.time(),
         }
-        spark.createDataFrame(
-            [(i, json.dumps(lineage_row))], "round long, record string"
-        ).write.mode("append").parquet(self.lineage_path)
+        with open(self.lineage_path, "a") as fh:
+            fh.write(json.dumps(record) + "\n")
 
         state = {"round": i, "selected": selected.names}
         tmp = self.state_path + ".tmp"
@@ -144,8 +127,19 @@ class RoundCheckpoint:
             return json.load(fh)
 
     def lineage(self, spark: SparkSession):
-        """The lineage table: one JSON record per completed round."""
-        return spark.read.parquet(self.lineage_path).orderBy("round")
+        """The lineage table ``(round long, record string)``: one JSON
+        record per completed round, ordered by round."""
+        records = []
+        if os.path.exists(self.lineage_path):
+            with open(self.lineage_path) as fh:
+                records = [
+                    (json.loads(line)["round"], line.rstrip("\n"))
+                    for line in fh
+                    if line.strip()
+                ]
+        return spark.createDataFrame(
+            sorted(records, key=lambda r: r[0]), "round long, record string"
+        )
 
     def round_frame(self, spark: SparkSession, i: int):
         from featurescreening_jl_spark.frame import FeatureFrame

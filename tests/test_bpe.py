@@ -138,3 +138,24 @@ def test_word_counts_is_one_aggregate(spark, corpus_df):
     assert wc["low"] == 6 and wc["newest"] == 7
     plan = word_counts(corpus_df)._jdf.queryExecution().executedPlan()
     assert str(plan).count("Exchange hashpartitioning") == 1
+
+
+def test_encode_oracle_sql_quotes_apostrophe_symbols():
+    # the DuckDB oracle inlines the merge list as SQL string literals;
+    # symbols may contain ' (the word pattern keeps apostrophes), so an
+    # unescaped quote would end the literal. Needs no SparkSession.
+    import os
+    import sys
+
+    import duckdb
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as entrymod
+
+    merges = [("n", "'"), ("n'", "t")]
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT 1 AS doc_id, 'don''t' AS text")
+    got = con.execute(entrymod._bpe_encode_oracle(merges)).fetchall()
+    want = bpe_encode_word("don't", {p: i for i, p in enumerate(merges)})
+    assert want == ["d", "o", "n't", _EOW]
+    assert got == [(1, len(want), " ".join(want))]

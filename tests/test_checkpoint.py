@@ -50,7 +50,10 @@ class TestCheckpoint:
         rec = json.loads(lineage[-1]["record"])
         assert rec["n_rows"] == 25
         assert rec["n_features"] == 3
-        assert sum(rec["partition_rows"].values()) == 25
+        # the record carries the round's full ranking, survivors included
+        ranked = {name for name, _ in rec["importances"]}
+        assert set(rec["features"]) <= ranked
+        assert all(isinstance(c, int) for _, c in rec["importances"])
         state = ckpt.load_state()
         assert state["round"] == 3
         assert len(state["selected"]) == 3
@@ -96,3 +99,53 @@ class TestCheckpoint:
         monkeypatch.setattr(iceberg_mod, "iceberg_active", lambda s: True)
         restored = ckpt.round_frame(spark, 3)
         assert restored.count() == 25
+
+    def test_save_round_runs_one_spark_job(self, feature_frame, tmp_path, spark):
+        """A round checkpoint is the survivor write alone: its row count
+        rides on the write as an Observation, and the ranking and lineage
+        go to a driver-side record."""
+        sc = spark.sparkContext
+        ckpt = RoundCheckpoint(str(tmp_path / "ckpt5"))
+        groups = [f"save_round-{tmp_path.name}-{i}" for i in range(3)]
+        for i, group in enumerate(groups):
+            selected = feature_frame.select_features(feature_frame.names[i:])
+            sc.setJobGroup(group, "checkpoint round")
+            try:
+                ckpt.save_round(i, selected, [(n, 1) for n in selected.names])
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        tracker = sc.statusTracker()
+        assert [len(tracker.getJobIdsForGroup(g)) for g in groups] == [1, 1, 1]
+        rec = json.loads(ckpt.lineage(spark).collect()[-1]["record"])
+        assert rec["n_rows"] == 25 and rec["n_features"] == 9
+
+    def test_resume_from_root_with_parquet_lineage_dir(
+        self, feature_frame, tmp_path, spark
+    ):
+        """A root whose rounds also left a parquet ``_lineage/`` directory
+        and ``importances/`` round dirs (the earlier on-disk layout) still
+        resumes: resume reads only state.json, and the JSON-lines lineage
+        record does not collide with the directory."""
+        root = str(tmp_path / "ckpt6")
+        ckpt = RoundCheckpoint(root)
+        with pytest.raises(KeyboardInterrupt):
+            _run(feature_frame, ckpt=ckpt, stop_after=2)
+        os.remove(ckpt.lineage_path)
+        for i in range(2):
+            spark.createDataFrame(
+                [(i, json.dumps({"round": i}))], "round long, record string"
+            ).write.mode("append").parquet(os.path.join(root, "_lineage"))
+            spark.createDataFrame(
+                [("01", 1)], "feature string, importance long"
+            ).write.parquet(
+                os.path.join(root, "rounds", f"round={i:04d}", "importances")
+            )
+
+        resumed = _run(feature_frame, ckpt=RoundCheckpoint(root), resume=root)
+        assert ckpt.load_state() == {"round": 3, "selected": resumed.names}
+        # the parquet directory is left alone and is not read back
+        assert os.path.isdir(os.path.join(root, "_lineage"))
+        assert [r["round"] for r in ckpt.lineage(spark).collect()] == [2, 3]

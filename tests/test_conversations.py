@@ -3,6 +3,8 @@
 import datetime as dt
 
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
 from featurescreening_jl_spark.operators.conversations import (
@@ -729,6 +731,13 @@ class TestContextBudgetChunked:
     the single-task result EXACTLY (two-phase running sum + ghost-row
     frame coverage)."""
 
+    # A failed in-plan check reaches Python as pyspark's
+    # SparkRuntimeException when one query stage fails first, or as a
+    # Py4JJavaError (STAGE_MATERIALIZATION_MULTIPLE_FAILURES) when AQE
+    # sees both broadcast stages carrying the check fail; which one
+    # comes first is a race, so accept either and pin the message.
+    CHECK_FAILED = (Py4JJavaError, SparkRuntimeException)
+
     def _varied(self, spark, n=400, convs=3):
         # varied token counts (1..13 words) so frames span uneven row
         # counts; multiple convs so chunk/offset logic is per-conv
@@ -822,8 +831,6 @@ class TestContextBudgetChunked:
         # the plan: gappy turn_idx (every other turn filtered out) must
         # raise at execution, not silently thin the ghost overlap and
         # corrupt frames
-        from py4j.protocol import Py4JJavaError
-
         from featurescreening_jl_spark.operators.conversations import (
             context_budget_features,
         )
@@ -831,10 +838,32 @@ class TestContextBudgetChunked:
         df = self._varied(spark, n=200, convs=1).where(
             F.col("turn_idx") % 2 == 0
         )
-        with pytest.raises(Py4JJavaError, match="dense 0-based"):
+        with pytest.raises(self.CHECK_FAILED, match="dense 0-based"):
             context_budget_features(df, 10, chunk_turns=20).write.format(
                 "noop"
             ).mode("overwrite").save()
+
+    @pytest.mark.parametrize("op", ["context_budget_features", "sft_pairs"])
+    def test_missing_chunk_fails_loudly(self, spark, op):
+        # turn_idx 0-24 and 50-74 at chunk_turns=25: every present chunk
+        # is dense and full, but chunk 1 is absent, so chunk 2's lookback
+        # would get no ghosts from the turns just before it
+        from featurescreening_jl_spark.operators import conversations
+
+        df = (
+            self._varied(spark, n=75, convs=1)
+            .where(~F.col("turn_idx").between(25, 49))
+            .withColumn(
+                "role",
+                F.when(F.col("turn_idx") % 3 == 1, "assistant").otherwise(
+                    "user"
+                ),
+            )
+        )
+        args = (10,) if op == "context_budget_features" else ()
+        out = getattr(conversations, op)(df, *args, chunk_turns=25)
+        with pytest.raises(self.CHECK_FAILED, match="missing chunk"):
+            out.write.format("noop").mode("overwrite").save()
 
     @pytest.mark.parametrize("chunk", [7, 40, 500])
     def test_turn_edit_chunked_equals_single_task(self, spark, chunk):

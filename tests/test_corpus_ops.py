@@ -714,6 +714,25 @@ class TestHashedVerify:
         assert len(exact) >= 4  # non-vacuous: the clone pairs exist
         assert hashed == exact
 
+    def test_short_and_empty_texts_match_exact_path(self, spark):
+        # texts shorter than shingle_n hash the tokens they have (ANSI
+        # mode would raise on element_at past the end of the token array)
+        from featurescreening_jl_spark.operators.dedup import (
+            minhash_lsh_pairs,
+        )
+
+        corpus = spark.createDataFrame(
+            [(1, "hello world"), (2, "hello world"), (3, "hello"),
+             (4, "hello"), (5, ""), (6, ""), (7, "a b c d")],
+            ["doc_id", "text"],
+        )
+        exact = sorted(map(tuple, minhash_lsh_pairs(corpus).collect()))
+        hashed = sorted(
+            map(tuple, minhash_lsh_pairs(corpus, hashed_verify=True).collect())
+        )
+        assert (1, 2, 1.0) in exact  # non-vacuous: the short pair exists
+        assert hashed == exact
+
     def test_shingles_hashed_matches_string_level1_cardinality(self, spark):
         # shingles_hashed must produce the same SET SIZE as hashing the
         # string shingles (bijection between token triples and joined
