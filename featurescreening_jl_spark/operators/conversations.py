@@ -100,7 +100,6 @@ def _chunked_prefix_with_ghosts(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w_last = Window.partitionBy(by)
-    w_prev = Window.partitionBy(by).orderBy("__ck")
     per_chunk = local.groupBy(by, "__ck").agg(
         F.sum(value_col).alias("__csum"),
         F.count(F.lit(1)).alias("__cnt"),
@@ -114,9 +113,9 @@ def _chunked_prefix_with_ghosts(
             (F.col("__ck") == F.max("__ck").over(w_last))
             | (F.col("__pmax") == F.lit(int(chunk_turns - 1)))
         )
-        & F.coalesce(
-            F.lag("__ck").over(w_prev) == F.col("__ck") - 1, F.lit(True)
-        )
+        # one row per chunk: chunks 0..max are all present exactly when
+        # the conversation has max + 1 of them
+        & (F.count(F.lit(1)).over(w_last) == F.max("__ck").over(w_last) + 1)
     )
     offsets = per_chunk.select(
         by,
@@ -136,17 +135,18 @@ def _chunked_prefix_with_ghosts(
             F.coalesce(F.sum("__csum").over(wch), F.lit(0)),
         ).alias("__off"),
     )
-    cum = local.join(offsets, [by, "__ck"]).withColumn(
-        "__cum", F.col("__lsum") + F.col("__off")
-    )
-    ghosts = (
-        cum.where(F.col("__pos") >= F.lit(int(chunk_turns - overlap_rows)))
-        .withColumn("__ck", F.col("__ck") + 1)
-        .withColumn("__ghost", F.lit(True))
+    # one join of the offsets: every row is emitted as itself and, if it
+    # is among its chunk's last overlap_rows, once more as a ghost of the
+    # next chunk, so the offsets subplan (and its check) runs once
+    tail = F.col("__pos") >= F.lit(int(chunk_turns - overlap_rows))
+    copies = F.when(tail, F.array(F.lit(False), F.lit(True))).otherwise(
+        F.array(F.lit(False))
     )
     return (
-        cum.withColumn("__ghost", F.lit(False))
-        .unionByName(ghosts)
+        local.join(offsets, [by, "__ck"])
+        .withColumn("__cum", F.col("__lsum") + F.col("__off"))
+        .withColumn("__ghost", F.explode(copies))
+        .withColumn("__ck", F.col("__ck") + F.col("__ghost").cast("long"))
         .drop("__pos", "__lsum", "__off")
     )
 

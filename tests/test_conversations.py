@@ -3,7 +3,6 @@
 import datetime as dt
 
 import pytest
-from py4j.protocol import Py4JJavaError
 from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
@@ -731,13 +730,6 @@ class TestContextBudgetChunked:
     the single-task result EXACTLY (two-phase running sum + ghost-row
     frame coverage)."""
 
-    # A failed in-plan check reaches Python as pyspark's
-    # SparkRuntimeException when one query stage fails first, or as a
-    # Py4JJavaError (STAGE_MATERIALIZATION_MULTIPLE_FAILURES) when AQE
-    # sees both broadcast stages carrying the check fail; which one
-    # comes first is a race, so accept either and pin the message.
-    CHECK_FAILED = (Py4JJavaError, SparkRuntimeException)
-
     def _varied(self, spark, n=400, convs=3):
         # varied token counts (1..13 words) so frames span uneven row
         # counts; multiple convs so chunk/offset logic is per-conv
@@ -838,21 +830,25 @@ class TestContextBudgetChunked:
         df = self._varied(spark, n=200, convs=1).where(
             F.col("turn_idx") % 2 == 0
         )
-        with pytest.raises(self.CHECK_FAILED, match="dense 0-based"):
+        with pytest.raises(SparkRuntimeException, match="dense 0-based"):
             context_budget_features(df, 10, chunk_turns=20).write.format(
                 "noop"
             ).mode("overwrite").save()
 
     @pytest.mark.parametrize("op", ["context_budget_features", "sft_pairs"])
-    def test_missing_chunk_fails_loudly(self, spark, op):
-        # turn_idx 0-24 and 50-74 at chunk_turns=25: every present chunk
-        # is dense and full, but chunk 1 is absent, so chunk 2's lookback
-        # would get no ghosts from the turns just before it
+    @pytest.mark.parametrize("missing", [0, 1])
+    def test_missing_chunk_fails_loudly(self, spark, op, missing):
+        # turn_idx 0-74 at chunk_turns=25 without one chunk's 25 turns:
+        # every present chunk is dense and full, but a missing chunk 1
+        # leaves chunk 2's lookback without ghosts from the turns just
+        # before it; a missing chunk 0 breaks the 0-based numbering the
+        # hatch requires
         from featurescreening_jl_spark.operators import conversations
 
+        lo = 25 * missing
         df = (
             self._varied(spark, n=75, convs=1)
-            .where(~F.col("turn_idx").between(25, 49))
+            .where(~F.col("turn_idx").between(lo, lo + 24))
             .withColumn(
                 "role",
                 F.when(F.col("turn_idx") % 3 == 1, "assistant").otherwise(
@@ -862,7 +858,7 @@ class TestContextBudgetChunked:
         )
         args = (10,) if op == "context_budget_features" else ()
         out = getattr(conversations, op)(df, *args, chunk_turns=25)
-        with pytest.raises(self.CHECK_FAILED, match="missing chunk"):
+        with pytest.raises(SparkRuntimeException, match="missing chunk"):
             out.write.format("noop").mode("overwrite").save()
 
     @pytest.mark.parametrize("chunk", [7, 40, 500])
