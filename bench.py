@@ -6,9 +6,10 @@ Prints ONE JSON line:
    "queries": {name: sec, ...}, "sf": ..., ...extras}``
 
 Env knobs: ``SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1),
-``SPARK_GRAFT_CPUS`` (default 32), ``SPARK_GRAFT_BENCH_REPS`` (default 2:
+``SPARK_GRAFT_CPUS`` (default 32), ``SPARK_GRAFT_BENCH_REPS`` (default 3:
 the full query list runs REPS interleaved passes and each query reports
-its MIN — see the burst-weather note in main()), and
+its MIN — see the burst-weather note in main() — and its rep spread,
+max/min over its reps, under ``rep_spreads``), and
 ``SPARK_GRAFT_BENCH_BUDGET`` (default 600 s: extra passes start only
 while under budget, so a burst-slowed run sheds reps instead of
 overrunning an external timeout; pass 1 always completes). Each query is
@@ -102,7 +103,7 @@ def main() -> None:
     # outside any single burst. The min is the honest estimator here:
     # variance is exogenous (host weather), strictly additive, and the
     # quantity being measured — the plan's compute cost — is the floor.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
+    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     # wall-clock budget for EXTRA passes: pass 1 always completes (there
     # must be a number for every query), later passes start only while
     # elapsed time is under budget — so a burst-slowed run degrades to
@@ -126,11 +127,16 @@ def main() -> None:
             spark.catalog.clearCache()
         reps_run += 1
     timings = {n: round(min(ts), 3) for n, ts in per_rep.items()}
-    # weather report: median over queries of (max rep / min rep). ~1.0 on
-    # a quiet box; well above ~1.5 means bursts hit one of the passes and
-    # the min-of-reps correction was load-bearing for this JSON.
-    spreads = sorted(max(ts) / max(min(ts), 1e-9) for ts in per_rep.values())
-    rep_spread = round(spreads[len(spreads) // 2], 3) if spreads else 1.0
+    # weather report: each query's max rep / min rep (1.0 with one rep),
+    # and their median. ~1.0 on a quiet box; well above ~1.5 means bursts
+    # hit one of the passes and the min-of-reps correction was
+    # load-bearing for this JSON. A change smaller than a query's own
+    # spread is not a measured change of that query.
+    rep_spreads = {
+        n: round(max(ts) / max(min(ts), 1e-9), 3) for n, ts in per_rep.items()
+    }
+    spreads = sorted(rep_spreads.values())
+    rep_spread = spreads[len(spreads) // 2] if spreads else 1.0
 
     total = round(sum(timings.values()), 3)
     out = {
@@ -142,6 +148,7 @@ def main() -> None:
         "cpus": CPUS,
         "bench_reps": reps_run,
         "rep_spread_median": rep_spread,
+        "rep_spreads": rep_spreads,
         # 1.0 = quiet box; >1.1 = co-tenant steal inflated this run
         "parallel_interference": parallel_interference(),
     }

@@ -668,8 +668,14 @@ def turn_edit_features(
     sorted before their role block, so the existing in-chunk lag finds
     them exactly where the single-task window would have found the
     real predecessor — no join back, so the corpus pays only the one
-    (conv, chunk) exchange the window needs anyway. Requires dense
-    0-based ``order_col`` numbering per conversation; exact equality
+    (conv, chunk) exchange the window needs anyway. The carry is exact
+    when ``order`` agrees with the chunk order within each (conv, role):
+    every turn of a role in chunk c sorts by ``order`` before its turns
+    in any later chunk. That, not dense numbering (gaps only change
+    chunk sizes), is the precondition, and it is checked in-plan: the
+    per-(conv, chunk, role) aggregate also carries the min and max
+    ``order`` key, and an ``assert_true`` on the ghost rows fails the
+    job if a chunk's max exceeds the next chunk's min. Exact equality
     with the single-task path is pinned in tests.
 
     Output: ``by``, ``order_col``, ``role_col``, ``prev_`` distance
@@ -717,12 +723,18 @@ def turn_edit_features(
         # formulation) re-shuffled the WHOLE corpus on (conv, chunk,
         # role) through a SortMergeJoin; ghosts ride the one (conv,
         # chunk) exchange the window already pays.
+        key = F.struct(*[F.col(c) for c in order])
         lasts = pre.groupBy(by, "__ck", role_col).agg(
-            F.max_by(
-                "__cur", F.struct(*[F.col(c) for c in order])
-            ).alias("__last")
+            F.max_by("__cur", key).alias("__last"),
+            F.min(key).alias("__kmin"),
+            F.max(key).alias("__kmax"),
         )
         w_carry = Window.partitionBy(by, role_col).orderBy("__ck")
+        # the carry's precondition, on |groups| rows: a role's turns in
+        # chunk c all sort before its turns in the next chunk it has
+        ordered = F.coalesce(
+            F.lag("__kmax").over(w_carry) <= F.col("__kmin"), F.lit(True)
+        )
         sentinels = [
             F.lit(None).cast(pre.schema[c].dataType).alias(c)
             for c in [order_col, *extra_order]
@@ -732,7 +744,17 @@ def turn_edit_features(
                 by,
                 "__ck",
                 F.col(role_col),
-                F.lag("__last").over(w_carry).alias("__cur"),
+                F.when(
+                    F.assert_true(
+                        ordered,
+                        f"turn_edit_features: chunk_turns requires "
+                        f"{order} order to agree with {order_col} chunk "
+                        f"order within each conversation and role (a "
+                        f"turn sorts before a same-role turn of an "
+                        f"earlier chunk)",
+                    ).isNull(),
+                    F.lag("__last").over(w_carry),
+                ).alias("__cur"),
             )
             .where(F.col("__cur").isNotNull())
             .select(

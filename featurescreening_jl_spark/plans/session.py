@@ -14,6 +14,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_PARALLELISM = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory the engine package is imported from
+_ENGINE_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 
 def _default_driver_mem() -> str:
@@ -50,8 +54,16 @@ def get_spark(
     ``iceberg_warehouse`` attaches an Iceberg Hadoop catalog named
     ``graft`` when the runtime jar is available (sources/iceberg.py);
     without a jar it logs a warning and the engine stays on parquet.
+
+    Python workers start from the engine's daemon (``plans/pydaemon.py``:
+    a task no longer re-reads ``pyspark.zip``), so the engine's import
+    root goes first on ``spark.executorEnv.PYTHONPATH``; a caller's value
+    for that key in ``extra_conf`` is appended, not dropped.
     """
     k = parallelism or DEFAULT_PARALLELISM
+    extra = dict(extra_conf or {})
+    caller_path = extra.pop("spark.executorEnv.PYTHONPATH", "")
+    worker_path = os.pathsep.join(filter(None, [_ENGINE_ROOT, caller_path]))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{k}]")
@@ -69,12 +81,17 @@ def get_spark(
         .config("spark.driver.memory", _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config(
+            "spark.python.daemon.module",
+            "featurescreening_jl_spark.plans.pydaemon",
+        )
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     if iceberg_warehouse:
         from featurescreening_jl_spark.sources.iceberg import configure_iceberg
 
         builder = configure_iceberg(builder, iceberg_warehouse)
-    for key, val in (extra_conf or {}).items():
+    for key, val in extra.items():
         builder = builder.config(key, val)
     return builder.getOrCreate()
 

@@ -901,6 +901,57 @@ class TestContextBudgetChunked:
         assert any(d is None for d in dists)
         assert any(d is not None and d > 0 for d in dists)
 
+    def _edit_turns(self, spark, moved_turn, moved_to_s):
+        # one conversation, user on even turns and assistant on odd ones,
+        # ts = turn_idx seconds except one turn moved to moved_to_s
+        secs = F.when(
+            F.col("turn_idx") == moved_turn, F.lit(moved_to_s)
+        ).otherwise(F.col("turn_idx"))
+        return self._varied(spark, n=40, convs=1).select(
+            "conv_id",
+            "turn_idx",
+            F.when(F.col("turn_idx") % 2 == 0, "user")
+            .otherwise("assistant")
+            .alias("role"),
+            "text",
+            (
+                F.lit(1700000000).cast("timestamp")
+                + F.make_interval(secs=secs.cast("decimal(18,6)"))
+            ).alias("ts"),
+        )
+
+    def test_turn_edit_ts_disagreeing_across_chunks_fails_loudly(self, spark):
+        # at chunk_turns=10, assistant turn 5 moved to 25 s sorts after
+        # the chunk-1 assistant turns (11-19 s): the carry would hand
+        # turn 11 turn 5's text where the single task sees turn 9's
+        from featurescreening_jl_spark.operators.conversations import (
+            turn_edit_features,
+        )
+
+        df = self._edit_turns(spark, moved_turn=5, moved_to_s=25)
+        turn_edit_features(df).write.format("noop").mode("overwrite").save()
+        out = turn_edit_features(df, chunk_turns=10)
+        with pytest.raises(SparkRuntimeException, match="agree with turn_idx"):
+            out.write.format("noop").mode("overwrite").save()
+
+    def test_turn_edit_chunked_needs_only_per_role_order(self, spark):
+        # the carry is per role: assistant turn 9 moved past user turn 10
+        # (10.5 s) is still before every later assistant turn, and gaps
+        # in turn_idx only change chunk sizes — both stay exact
+        from featurescreening_jl_spark.operators.conversations import (
+            turn_edit_features,
+        )
+
+        df = self._edit_turns(spark, moved_turn=9, moved_to_s=10.5).where(
+            F.col("turn_idx") % 7 != 3
+        )
+        key = lambda r: (r["turn_idx"], r["edit_dist"], r["edit_sim"])  # noqa: E731
+        single = sorted(map(key, turn_edit_features(df).collect()))
+        chunked = sorted(
+            map(key, turn_edit_features(df, chunk_turns=10).collect())
+        )
+        assert chunked == single and len(single) == 34
+
     def test_chunked_parallelizes_one_conversation(self, spark):
         # the point of the hatch: a single conversation's work lands in
         # MANY tasks — the budget window partitions by (conv, chunk),
