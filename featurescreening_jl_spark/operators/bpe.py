@@ -41,16 +41,12 @@ __all__ = ["word_counts", "learn_bpe", "bpe_encode", "bpe_encode_word"]
 _EOW = "</w>"
 
 
-def word_counts(
-    docs: DataFrame, text_col: str = "text", lowercase: bool = True
-) -> DataFrame:
-    """Corpus → (word, count): the one pass over the raw text. Map-side
+def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Corpus → (word, count): the one pass over the raw text, lowercased
+    and split on runs of characters outside ``[a-z0-9']``. Map-side
     combined; everything downstream touches only this (vocabulary-sized)
     table."""
-    txt = F.col(text_col)
-    if lowercase:
-        txt = F.lower(txt)
-    w = F.explode(F.split(txt, r"[^a-z0-9']+" if lowercase else r"\s+"))
+    w = F.explode(F.split(F.lower(F.col(text_col)), r"[^a-z0-9']+"))
     return (
         docs.select(w.alias("word"))
         .where(F.length("word") >= 1)

@@ -162,7 +162,7 @@ def local_forest_split_counts(
 
 
 def _resolved_cfg(config: Optional[dict[str, Any]], n_features: int,
-                  trees_per_partition: int) -> dict[str, Any]:
+                  num_partitions: int) -> dict[str, Any]:
     cfg = {**DEFAULT_CONFIG_FOR_FEATURE_IMPORTANCE, **(config or {})}
     n_sub = cfg["n_subfeatures"]
     if n_sub in (-1, 0):
@@ -172,7 +172,7 @@ def _resolved_cfg(config: Optional[dict[str, Any]], n_features: int,
     depth = cfg["max_depth"]
     cfg["_max_depth"] = 30 if depth is None or int(depth) < 0 else int(depth)
     cfg["_n_candidate_features"] = m
-    cfg["_trees"] = trees_per_partition
+    cfg["_trees"] = max(int(cfg["n_trees"]) // num_partitions, 1)
     return cfg
 
 
@@ -190,14 +190,13 @@ def feature_importance_partitioned(
     rng: Any = None,
     *,
     num_partitions: int = DEFAULT_ENSEMBLE_PARTITIONS,
-    trees_per_partition: Optional[int] = None,
 ) -> list[tuple[str, int]]:
     """Ranked ``(feature_name, split_count)`` via the partition ensemble.
 
     ``config['n_trees']`` is the TOTAL tree budget, split evenly across
-    ``num_partitions`` (≥1 tree each) unless ``trees_per_partition`` is
-    given. Ranking contract matches the MLlib backend: count desc,
-    original column position asc; never-split features absent.
+    ``num_partitions`` (≥1 tree each). Ranking contract matches the MLlib
+    backend: count desc, original column position asc; never-split
+    features absent.
 
     The training input always gets :func:`ensemble_layout`. Over a cache
     already in that layout with the same ``num_partitions`` (the screening
@@ -208,11 +207,7 @@ def feature_importance_partitioned(
 
     seed = int(make_rng(rng).integers(0, 2**31 - 1))
     names = ff.feature_names
-    n_feats = len(names)
-    cfg_total = {**DEFAULT_CONFIG_FOR_FEATURE_IMPORTANCE, **(config or {})}
-    if trees_per_partition is None:
-        trees_per_partition = max(int(cfg_total["n_trees"]) // num_partitions, 1)
-    cfg = _resolved_cfg(config, n_feats, trees_per_partition)
+    cfg = _resolved_cfg(config, len(names), num_partitions)
 
     labels = ff.distinct_labels()
     n_classes = len(labels)

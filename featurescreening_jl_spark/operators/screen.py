@@ -97,7 +97,7 @@ def screen(
       semantics-faithful) or ``"partitioned"`` (map-only partition
       ensemble, the near-linear-scaling path for huge inputs — see
       operators/importance_dist.py). ``backend_options`` forwards e.g.
-      ``num_partitions`` / ``trees_per_partition``.
+      ``num_partitions``.
     - ``unpersist`` — drop the loop cache before returning (default).
       Pass False when the caller consumes the RETURNED frame immediately:
       the result is a narrow projection of the cached base, so keeping

@@ -7,8 +7,8 @@ module asks how STABLE that ranking is under data perturbation): fit the
 forest on ``n_folds`` deterministic half-subsamples, record each fold's
 top-``top_m`` feature set, and score every feature by the fraction of
 folds that ranked it top-``top_m``. Features whose selection frequency
-clears ``min_freq`` are the stable set — a screening verdict that one
-lucky forest can't produce, and the standard guard against the
+clears the caller's cut are the stable set — a screening verdict that
+one lucky forest can't produce, and the standard guard against the
 winner's-curse features a single `screen` tournament can admit.
 
 Scale shape: each fold is ONE importance fit over a portable-hash
@@ -44,7 +44,6 @@ def stability_select(
     *,
     n_folds: int = 5,
     subsample: float = 0.5,
-    min_freq: float = 0.6,
     config: Optional[dict[str, Any]] = None,
     rng: Any = 42,
     backend: str = "mllib",
@@ -56,9 +55,9 @@ def stability_select(
     Returns ``[(feature_name, selection_freq, mean_rank), ...]`` sorted
     by frequency desc, mean rank asc, original column position asc —
     one row per feature that was ranked top-``top_m`` in at least one
-    fold (``selection_freq >= 1/n_folds``; features stable under
-    ``min_freq`` are the caller's cut: ``[n for n, f, _ in out if
-    f >= min_freq]``). ``mean_rank`` averages the 0-based rank over the
+    fold (``selection_freq >= 1/n_folds``; the stable set is the
+    caller's cut, e.g. ``[n for n, f, _ in out if f >= 0.6]``).
+    ``mean_rank`` averages the 0-based rank over the
     folds that selected the feature.
 
     Folds are portable-hash subsamples: row membership in fold ``f`` is

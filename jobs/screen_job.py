@@ -10,7 +10,11 @@ Usage (cluster):
         jobs/screen_job.py --input <parquet|table> --output <dir> \
         [--from-transcripts] [--reduced-size 200] [--step-size 2000] \
         [--shuffle] [--random-seed 1] [--n-trees 1000] [--max-depth -1] \
-        [--checkpoint-dir <dir>] [--resume] [--verbosity 1]
+        [--checkpoint-dir <dir>] [--resume] [--verbosity 1] \
+        [--importance-backend partitioned [--ensemble-partitions <n>]]
+
+A partitioned run uses the engine's ``DEFAULT_ENSEMBLE_PARTITIONS`` (64)
+ensemble partitions unless ``--ensemble-partitions`` is given.
 
 Build the zip with:  python tools/package.py
 """
@@ -52,9 +56,10 @@ def parse_args(argv):
     # partitioned = map-only partition-ensemble (the 10^12-row scale path)
     p.add_argument("--importance-backend", default="spark_ml",
                    choices=["spark_ml", "partitioned"])
-    p.add_argument("--ensemble-partitions", type=int, default=256,
+    p.add_argument("--ensemble-partitions", type=int, default=None,
                    help="fixed partition count for --importance-backend "
-                        "partitioned (determinism + balance knob)")
+                        "partitioned (determinism + balance knob); unset "
+                        "uses the engine's DEFAULT_ENSEMBLE_PARTITIONS")
     # deterministic holdout: a hash-based fraction of KEYS kept entirely
     # out of screening (transcripts mode splits on conv_id so a
     # conversation can never straddle the boundary; matrix mode splits on
@@ -184,9 +189,10 @@ def main(argv=None) -> None:
         resume_from=(args.checkpoint_dir if args.resume else None),
         show_progress=bool(args.verbosity),
         importance_backend=args.importance_backend,
+        # read by the partitioned backend only
         backend_options=(
-            {"num_partitions": args.ensemble_partitions}
-            if args.importance_backend == "partitioned" else None
+            None if args.ensemble_partitions is None
+            else {"num_partitions": args.ensemble_partitions}
         ),
     )
     result.save(args.output)

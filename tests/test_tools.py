@@ -25,7 +25,7 @@ from featurescreening_jl_spark.operators.window_features import (
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-TOOLS = ["bench_scaling", "bench_stages"]
+TOOLS = ["bench_scaling"]
 ENTRY_POINTS = {
     fn.__name__: fn
     for fn in (screen, feature_importance_partitioned, turn_feature_frame,
@@ -33,14 +33,18 @@ ENTRY_POINTS = {
 }
 
 
-def _templates(tool: str) -> dict[str, str]:
+def _tool(tool: str):
     spec = importlib.util.spec_from_file_location(
         f"_tool_{tool}", os.path.join(REPO, "tools", f"{tool}.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    return mod
+
+
+def _templates(tool: str) -> dict[str, str]:
     return {
-        name: value for name, value in vars(mod).items()
+        name: value for name, value in vars(_tool(tool)).items()
         if name.isupper() and isinstance(value, str) and "{repo!r}" in value
     }
 
@@ -93,3 +97,25 @@ def test_worker_templates_match_engine_signatures(tool):
                         )
             checked += 1
     assert checked, f"{tool} calls none of {sorted(ENTRY_POINTS)}"
+
+
+@pytest.mark.parametrize(
+    "n_turns, times, expected",
+    [
+        # strong: the same input at both levels; 4× the cores should take
+        # 1/4 of the time. median 11 s vs 4 s → 11 / (4 × 4); best 10 / (4 × 3)
+        ({8: 1000, 32: 1000}, {8: [10.0, 12.0, 11.0], 32: [4.0, 3.0, 5.0]},
+         (11 / 16, 10 / 12)),
+        # weak: 4× the input at 4× the cores should take the same time.
+        # median 12 s vs 15 s → 12 / 15; best 10 s vs 13 s → 10 / 13
+        ({8: 1000, 32: 4000}, {8: [10.0, 14.0, 12.0], 32: [15.0, 13.0, 16.0]},
+         (0.8, 10 / 13)),
+    ],
+    ids=["strong", "weak"],
+)
+def test_scaling_efficiency(n_turns, times, expected):
+    eff_median, eff_best = _tool("bench_scaling").efficiency(
+        times, n_turns, [8, 32]
+    )
+    assert eff_median == pytest.approx(expected[0])
+    assert eff_best == pytest.approx(expected[1])

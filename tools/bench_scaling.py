@@ -1,9 +1,17 @@
 """Two-parallelism scaling benchmark — the sandbox proxy for N vs 4N
-executor clusters (BASELINE.json north_rule: scaling efficiency ≥ 0.8).
+executor clusters (BASELINE.json north_rule: scaling efficiency ≥ 0.8) —
+with its per-stage decomposition from the same runs.
 
 Runs the IDENTICAL featurize→screen job on the IDENTICAL transcripts input
 at local[8] and local[32] (one fresh JVM per run via subprocess), reports
 turns/sec at both and efficiency = throughput(4N) / (4 × throughput(N)).
+Each worker then clears the cache and times the two dominant stages on
+the same JVM and input, so a gap in the composite can be localized:
+
+- ``featurize``: the windowed turn featurization (one conv_id window
+  shuffle, text dropped map-side) materialized to the noop sink;
+- ``train``: ONE full-tree-budget round of the partitioned importance
+  backend over a cached frame in the ensemble layout (map-only).
 
 Methodology notes (they matter in this sandbox):
 - the host shows intermittent CPU steal from co-tenants, so reps are
@@ -17,7 +25,8 @@ Methodology notes (they matter in this sandbox):
   the designed scale-out path and ~10× faster per round on this workload.
 
 Usage:
-    python tools/bench_scaling.py [--convs 300000] [--reps 3] [--write-md]
+    python tools/bench_scaling.py [--convs 300000] [--reps 3]
+        [--levels 8 32] [--weak] [--n-trees 1000] [--write-md] [--keep-data]
 """
 
 from __future__ import annotations
@@ -73,9 +82,50 @@ run_once()  # warm-up: JIT, codegen, page cache
 t0 = time.perf_counter()
 run_once()
 dt = time.perf_counter() - t0
+spark.catalog.clearCache()
+
+# ---- stage probes, after the end-to-end screen on the same JVM ----
+from featurescreening_jl_spark import FeatureFrame
+from featurescreening_jl_spark.operators.importance_dist import (
+    ensemble_layout, feature_importance_partitioned,
+)
+
+def run_featurize():
+    turn_feature_frame(transcripts).df.write.format("noop").mode(
+        "overwrite").save()
+
+# ---- stage 1: featurize (warm-up rep, then timed rep) ----
+run_featurize()
+t0 = time.perf_counter()
+run_featurize()
+t_featurize = time.perf_counter() - t0
+
+# ---- stage 2: one full-budget training round over the cached frame in
+# the ensemble layout (exactly the screening loop's shape) ----
+turns = turn_feature_frame(transcripts)
+base = ensemble_layout(
+    turns.df, "sample_id", DEFAULT_ENSEMBLE_PARTITIONS
+).cache()
+base.count()  # cache fill (excluded: amortized across all rounds)
+ff = FeatureFrame(base, turns.feature_names)
+cfg = {{"n_trees": {n_trees}, "max_depth": 8, "min_samples_leaf": 10,
+        "min_purity_increase": 0.0}}
+
+def run_train():
+    feature_importance_partitioned(
+        ff, config=cfg, rng=42, num_partitions=DEFAULT_ENSEMBLE_PARTITIONS,
+    )
+
+run_train()
+t0 = time.perf_counter()
+run_train()
+t_train = time.perf_counter() - t0
+
 spark.stop()
 print("RESULT " + json.dumps({{"parallelism": parallelism,
-                               "n_turns": n_turns, "time": dt}}))
+                               "n_turns": n_turns, "time": dt,
+                               "featurize": t_featurize,
+                               "train": t_train}}))
 """
 
 GEN = r"""
@@ -91,6 +141,8 @@ print("rows", spark.read.parquet({data!r}).count())
 spark.stop()
 """
 
+STAGES = ["featurize", "train"]
+
 
 def run_py(code: str) -> str:
     proc = subprocess.run(
@@ -100,6 +152,42 @@ def run_py(code: str) -> str:
         sys.stderr.write(proc.stderr[-4000:])
         raise RuntimeError("worker failed")
     return proc.stdout
+
+
+def efficiency(times: dict[int, list[float]], n_turns: dict[int, int],
+               levels: list[int]) -> tuple[float, float]:
+    """(median, best) efficiency of ``levels[1]`` over ``levels[0]``:
+    throughput(hi) / (hi/lo × throughput(lo)), throughput = turns / sec
+    from each level's median (resp. min) time. Under ``--weak`` the low
+    level ran on a hi/lo×-smaller input, and the same ratio is the
+    per-core throughput ratio."""
+    lo, hi = levels
+
+    def eff(pick) -> float:
+        thr = {p: n_turns[p] / pick(times[p]) for p in levels}
+        return thr[hi] / (hi / lo * thr[lo])
+
+    return eff(statistics.median), eff(min)
+
+
+def summarize(times: dict[int, list[float]], n_turns: dict[int, int],
+              levels: list[int]) -> dict:
+    med = {p: statistics.median(times[p]) for p in levels}
+    best = {p: min(times[p]) for p in levels}
+    eff_med, eff_best = efficiency(times, n_turns, levels)
+    return {
+        "median_sec": {str(p): round(med[p], 2) for p in levels},
+        "min_sec": {str(p): round(best[p], 2) for p in levels},
+        "turns_per_sec_median": {
+            str(p): round(n_turns[p] / med[p], 1) for p in levels
+        },
+        "turns_per_sec_best": {
+            str(p): round(n_turns[p] / best[p], 1) for p in levels
+        },
+        "efficiency_median": round(eff_med, 3),
+        "efficiency_best": round(eff_best, 3),
+        "all_times": {str(p): [round(t, 2) for t in times[p]] for p in levels},
+    }
 
 
 def main() -> None:
@@ -136,7 +224,9 @@ def main() -> None:
             run_py(GEN.format(repo=REPO, convs=convs_small, data=small))
         datasets[n_lo] = small
 
-    times: dict[int, list[float]] = {p: [] for p in args.levels}
+    times: dict[str, dict[int, list[float]]] = {
+        m: {p: [] for p in args.levels} for m in ["time", *STAGES]
+    }
     n_turns: dict[int, int] = {}
     # interleave levels to average out time-varying host interference
     for rep in range(args.reps):
@@ -151,53 +241,47 @@ def main() -> None:
             line = [ln for ln in out.splitlines() if ln.startswith("RESULT ")][0]
             res = json.loads(line[len("RESULT "):])
             n_turns[p] = res["n_turns"]
-            times[p].append(res["time"])
+            for m in times:
+                times[m][p].append(res[m])
 
-    med = {p: statistics.median(times[p]) for p in args.levels}
-    best = {p: min(times[p]) for p in args.levels}
-    thr_med = {p: n_turns[p] / med[p] for p in args.levels}
-    thr_best = {p: n_turns[p] / best[p] for p in args.levels}
-    if args.weak:
-        # per-core throughput ratio (the input sizes already differ ~ratio×)
-        eff_med = (thr_med[n_hi] / n_hi) / (thr_med[n_lo] / n_lo)
-        eff_best = (thr_best[n_hi] / n_hi) / (thr_best[n_lo] / n_lo)
-    else:
-        eff_med = thr_med[n_hi] / (ratio * thr_med[n_lo])
-        eff_best = thr_best[n_hi] / (ratio * thr_best[n_lo])
+    e2e = summarize(times["time"], n_turns, args.levels)
     summary = {
         "mode": "weak" if args.weak else "strong",
         "n_turns": {str(p): n_turns[p] for p in args.levels},
-        "median_sec": {str(p): round(med[p], 2) for p in args.levels},
-        "min_sec": {str(p): round(best[p], 2) for p in args.levels},
-        "turns_per_sec_median": {str(p): round(thr_med[p], 1) for p in args.levels},
-        "turns_per_sec_best": {str(p): round(thr_best[p], 1) for p in args.levels},
-        "scaling_efficiency_median": round(eff_med, 3),
-        "scaling_efficiency_best": round(eff_best, 3),
+        **{k: e2e[k] for k in ("median_sec", "min_sec",
+                               "turns_per_sec_median", "turns_per_sec_best")},
+        "scaling_efficiency_median": e2e["efficiency_median"],
+        "scaling_efficiency_best": e2e["efficiency_best"],
         "levels": args.levels,
         "reps": args.reps,
-        "all_times": {str(p): [round(t, 2) for t in times[p]]
-                      for p in args.levels},
+        "all_times": e2e["all_times"],
+        "stages": {
+            s: {k: v for k, v in summarize(times[s], n_turns,
+                                           args.levels).items()
+                if k != "turns_per_sec_best"}
+            for s in STAGES
+        },
     }
     print(json.dumps(summary))
 
     if args.write_md:
         os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
         path = os.path.join(REPO, "BENCH", "BASELINE.md")
-        mode = "weak" if args.weak else "strong"
         with open(path, "a") as fh:
             fh.write(
-                f"\n## {mode.capitalize()}-scaling run (featurize→screen, "
-                f"partitioned backend, n_trees={args.n_trees}, "
-                f"{args.reps} interleaved reps)\n\n"
+                f"\n## {summary['mode'].capitalize()}-scaling run "
+                f"(featurize→screen, partitioned backend, "
+                f"n_trees={args.n_trees}, {args.reps} interleaved reps)\n\n"
                 f"| parallelism | input turns | median sec | min sec "
                 f"| turns/sec (median) | turns/sec (best) |\n"
                 f"|---|---|---|---|---|---|\n"
             )
-            for p in args.levels:
+            for p in map(str, args.levels):
                 fh.write(
-                    f"| local[{p}] | {n_turns[p]} | {med[p]:.2f} "
-                    f"| {best[p]:.2f} | {thr_med[p]:.1f} "
-                    f"| {thr_best[p]:.1f} |\n"
+                    f"| local[{p}] | {summary['n_turns'][p]} "
+                    f"| {e2e['median_sec'][p]:.2f} | {e2e['min_sec'][p]:.2f} "
+                    f"| {e2e['turns_per_sec_median'][p]:.1f} "
+                    f"| {e2e['turns_per_sec_best'][p]:.1f} |\n"
                 )
             eff_def = (
                 f"per-core throughput({n_hi}, {ratio:.0f}×data) / "
@@ -207,10 +291,25 @@ def main() -> None:
             )
             fh.write(
                 f"\nscaling efficiency {eff_def}: "
-                f"median **{eff_med:.3f}**, best-rep **{eff_best:.3f}**\n"
-                f"\n(interleaved reps; the host shows intermittent CPU "
-                f"steal, so the min/best estimate is the cleaner capability "
-                f"number — interference is strictly additive.)\n"
+                f"median **{e2e['efficiency_median']:.3f}**, "
+                f"best-rep **{e2e['efficiency_best']:.3f}**\n"
+                f"\nStages, timed in the same workers after the end-to-end "
+                f"screen:\n\n"
+                f"| stage | local[{n_lo}] reps (s) | local[{n_hi}] reps (s) "
+                f"| eff (median) | eff (best) |\n|---|---|---|---|---|\n"
+            )
+            for s in STAGES:
+                st = summary["stages"][s]
+                fh.write(
+                    f"| {s} | "
+                    f"{', '.join(map(str, st['all_times'][str(n_lo)]))} | "
+                    f"{', '.join(map(str, st['all_times'][str(n_hi)]))} | "
+                    f"{st['efficiency_median']} | {st['efficiency_best']} |\n"
+                )
+            fh.write(
+                "\n(interleaved reps; the host shows intermittent CPU steal, "
+                "so the min/best estimate is the cleaner capability number — "
+                "interference is strictly additive.)\n"
             )
     if not args.keep_data:
         shutil.rmtree(TMP, ignore_errors=True)
