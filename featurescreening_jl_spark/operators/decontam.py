@@ -28,7 +28,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from featurescreening_jl_spark.operators.dedup import shingles
+from featurescreening_jl_spark.operators.dedup import _block_pairs, shingles
 
 __all__ = [
     "contamination_pairs",
@@ -291,17 +291,14 @@ def contamination_pairs(
     c = _exploded_ngrams(corpus, id_col, text_col, n)
     if prefilter_bitmap is not None:
         c = bitmap_prefilter(c, "__g", prefilter_bitmap)
-    b = _exploded_ngrams(benchmark, bench_id_col, bench_text_col, n).select(
-        F.col(bench_id_col), F.col("__g").alias("__bg")
-    )
+    b = _exploded_ngrams(benchmark, bench_id_col, bench_text_col, n)
     if broadcast_benchmark:
         b = F.broadcast(b)
-    return (
-        c.join(b, c["__g"] == b["__bg"])
-        .groupBy(id_col, bench_id_col)
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
-    )
+    return _block_pairs(c, ["__g"], b).select(
+        F.col("id_a").alias(id_col),
+        F.col("id_b").alias(bench_id_col),
+        F.col("shared").alias("n_shared"),
+    ).where(F.col("n_shared") >= min_shared)
 
 
 def flag_contaminated(

@@ -15,6 +15,21 @@ shuffle/join Catalyst can plan — never a driver-side loop:
                     (the verifier inside minhash_lsh, usable standalone on
                     small candidate sets).
 - embedding near-dup — see similarity.py (cosine threshold join).
+
+Every pair producer — here, in ``similarity.py`` (cosine), ``fuzzy_join.py``
+(edit distance) and ``decontam.py`` (benchmark overlap) — is one blocking →
+verify pipeline (the token blocking / block purging / common-blocks weight
+of SparkER, EDBT 2019):
+
+- a key expression explodes each row into ``(id, *key)`` rows;
+- ``_hot_keys`` is the one hot-key guard (logged, never silent);
+  ``_cap_buckets`` drops the hot keys' rows before the join;
+- ``_block_pairs`` joins within each key and returns each pair once, with
+  ``shared`` = the number of key matches;
+- ``_verify_pairs`` joins the pairs back to each side's payload and keeps
+  the exact predicate.
+
+A producer is its key expression, its predicate and its own bound.
 """
 
 from __future__ import annotations
@@ -48,24 +63,24 @@ def _norm(text):
     return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
 
 
-def _cap_buckets(
+def _hot_keys(
     keyed: DataFrame, key_cols: list[str], cap: int, op: str
 ) -> DataFrame:
-    """Drop rows of LSH buckets larger than ``cap`` (hot-bucket guard for
-    the within-bucket self-join, which is O(bucket²)). Logs how many
-    buckets/rows were capped — a coverage cap must never be silent.
+    """The one hot-key guard: the distinct ``key_cols`` values held by more
+    than ``cap`` rows of ``keyed``. A within-key join is O(key²), so one
+    hot key (millions of boilerplate-identical docs, a stop-gram) is the
+    blow-up every blocking join must guard against. What dropping the hot
+    keys costs in recall is the caller's to state.
 
-    LAZY: the hot-bucket aggregate is built INTO the returned plan (a
-    left-anti join against the over-cap keys), so composing callers get no
-    surprise eager job at plan-construction time (the round-3 form ran
-    one). The cap report rides a ``CollectMetrics`` observation on the
-    hot-key subplan and is logged by a daemon thread the moment the FIRST
-    action materializes the plan; if the plan is never executed nothing is
-    logged (and nothing ran). The agg output is one row per DISTINCT
-    bucket key, so the anti-join build side stays small even at 10^12
-    input rows; when no bucket exceeds the cap it is empty and AQE
-    collapses the anti-join to a pass-through. Nothing is ``persist()``-ed
-    — no cached table outlives the call."""
+    LAZY: the aggregate is built INTO the returned plan, so composing
+    callers get no eager job at plan-construction time. The report rides a
+    ``CollectMetrics`` observation on the hot-key subplan and is logged by
+    a daemon thread the moment the FIRST action materializes the plan — a
+    cap never fires silently; if the plan never runs, nothing ran and
+    nothing is logged. The result is one row per DISTINCT hot key, so a
+    join against it stays small even at 10^12 input rows (and empty when
+    nothing exceeds the cap). Nothing is ``persist()``-ed — no cached table
+    outlives the call."""
     import logging
     import threading
 
@@ -78,7 +93,7 @@ def _cap_buckets(
         .where(F.col("__bsz") > cap)
         .observe(
             obs,
-            F.count(F.lit(1)).alias("buckets"),
+            F.count(F.lit(1)).alias("keys"),
             F.coalesce(F.sum("__bsz"), F.lit(0)).alias("rows"),
         )
     )
@@ -90,16 +105,91 @@ def _cap_buckets(
             return
         if metrics["rows"]:
             logging.getLogger(__name__).warning(
-                "%s: capped %d hot bucket(s) holding %d rows at "
-                "max_bucket_size=%d — pairs only findable through those "
-                "buckets are NOT emitted",
-                op, metrics["buckets"], metrics["rows"], cap,
+                "%s: capped %d hot key(s) holding %d rows (more than %d "
+                "rows per key)",
+                op, metrics["keys"], metrics["rows"], cap,
             )
 
     threading.Thread(
         target=_log_on_first_materialize, daemon=True, name=f"{op}-cap-log"
     ).start()
-    return keyed.join(hot.select(*key_cols), on=key_cols, how="left_anti")
+    return hot.select(*key_cols)
+
+
+def _cap_buckets(
+    keyed: DataFrame, key_cols: list[str], cap: int, op: str
+) -> DataFrame:
+    """``keyed``, columns in order, without the rows of its hot keys
+    (:func:`_hot_keys`): a left-anti join that AQE collapses to a
+    pass-through when no key exceeds the cap."""
+    hot = _hot_keys(keyed, key_cols, cap, op)
+    return keyed.join(hot, on=key_cols, how="left_anti").select(*keyed.columns)
+
+
+def _block_pairs(
+    keyed: DataFrame,
+    key_cols: list[str],
+    other: DataFrame | None = None,
+    *,
+    cap: int | None = None,
+    op: str = "",
+) -> DataFrame:
+    """Blocking join: ``(id_a, id_b, shared)``, one row per pair of ids that
+    share at least one key, where ``shared`` counts the key matches WITH
+    multiplicity (a key held twice by ``a`` and once by ``b`` counts 2).
+
+    ``keyed`` and ``other`` are ``(id, *key_cols)`` frames, id first.
+    Self mode (``other=None``) joins ``keyed`` with itself and keeps
+    ``id_a < id_b``, so each unordered pair appears once and never
+    ``(x, x)``; cross mode joins ``keyed`` (``id_a``) with ``other``
+    (``id_b``) and keeps identical ids. ``cap`` drops the keys held by more
+    than ``cap`` rows of ``keyed`` first (:func:`_cap_buckets`, reported
+    under ``op``); in cross mode only ``keyed`` is capped.
+
+    Plan: one shuffle of the keyed rows (or a broadcast of a small side),
+    one within-key join, one pair aggregate. The payload never rides the
+    join — :func:`_verify_pairs` fetches it for the surviving pairs."""
+    if cap is not None:
+        keyed = _cap_buckets(keyed, key_cols, cap, op)
+    right = keyed if other is None else other
+    a = keyed.select(F.col(keyed.columns[0]).alias("id_a"), *key_cols)
+    b = right.select(F.col(right.columns[0]).alias("id_b"), *key_cols)
+    hits = a.join(b, on=key_cols)
+    if other is None:
+        hits = hits.where(F.col("id_a") < F.col("id_b"))
+    return hits.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("shared"))
+
+
+def _verify_pairs(
+    pairs: DataFrame,
+    payload_a: DataFrame,
+    payload_b: DataFrame,
+    name: str,
+    value,
+    keep,
+) -> DataFrame:
+    """Exact verify: join the ``(id_a, id_b, ...)`` pairs back to each
+    side's ``(id, payload)`` frame, add ``name`` = ``value(payload_a,
+    payload_b)`` and keep the rows where the ``keep`` predicate holds. The
+    pair columns stay readable, so ``value`` and ``keep`` may use them."""
+    a = payload_a.toDF("id_a", "__pa")
+    b = payload_b.toDF("id_b", "__pb")
+    return (
+        pairs.join(a, "id_a")
+        .join(b, "id_b")
+        .withColumn(name, value(F.col("__pa"), F.col("__pb")))
+        .where(keep)
+    )
+
+
+def _jaccard(a, b):
+    return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
+
+
+def _shingle_table(df: DataFrame, id_col: str, sh) -> DataFrame:
+    """``(id, __sh)`` for the rows whose shingle array ``sh`` is non-empty
+    — the payload every shingle-Jaccard producer blocks and verifies on."""
+    return df.select(F.col(id_col), sh.alias("__sh")).where(F.size("__sh") > 0)
 
 
 def hash60_portable(col):
@@ -385,84 +475,58 @@ def minhash_lsh_pairs(
     shingling is cheaper than the checkpoint write.
 
     Plan shape: signature projection (no shuffle) → explode into
-    ``bands`` rows each → groupBy band-bucket (one shuffle of
-    (8B key, id)) → self-join within buckets → distinct pairs →
-    Jaccard verify on a join back to shingle arrays.
+    ``bands`` rows each (the key expression) → :func:`_block_pairs`: one
+    shuffle of (8B key, id), self-join within buckets, one pair
+    aggregate → :func:`_verify_pairs`: Jaccard on a join back to the
+    shingle arrays (on the ``hashed_verify`` tier: the hash-space screen,
+    then the string verify of the survivors).
 
     ``max_bucket_size`` caps the within-bucket self-join: a bucket holding
     B ids yields B² candidate rows, so one hot bucket (e.g. millions of
     boilerplate-identical docs) is an O(B²) blow-up. Buckets above the cap
     are EXCLUDED from candidate generation — every surviving member of a
     capped bucket almost surely also collides in another band, but recall
-    is no longer guaranteed, so the cap is opt-in and every capped bucket
-    is logged (never silent).
+    is no longer guaranteed: pairs only findable through a capped bucket
+    are lost. The cap is opt-in and every capped bucket is logged (never
+    silent).
     """
     str_sh = shingles(F.col(text_col), n=shingle_n)
-    if hashed_verify:
-        # level-1 hashes come straight off the token slices — the
-        # shingle STRINGS are never built on this tier (see
-        # shingles_hashed); tier 2 below builds them only for survivors
-        sh = df.select(
-            F.col(id_col),
-            shingles_hashed(F.col(text_col), n=shingle_n).alias("__sh"),
-        ).where(F.size("__sh") > 0)
-    else:
-        sh = df.select(F.col(id_col), str_sh.alias("__sh")).where(
-            F.size("__sh") > 0
-        )
+    # on the hashed tier the level-1 hashes come straight off the token
+    # slices — the shingle STRINGS are never built there (see
+    # shingles_hashed); tier 2 below builds them only for survivors
+    sh = _shingle_table(
+        df,
+        id_col,
+        shingles_hashed(F.col(text_col), n=shingle_n)
+        if hashed_verify
+        else str_sh,
+    )
     if checkpoint_shingles:
         sh = sh.localCheckpoint()
-    banded = _band_table(
-        sh, id_col, num_hashes, bands, pre_hashed=hashed_verify
-    )
-
-    if max_bucket_size is not None:
-        banded = _cap_buckets(
-            banded, ["band", "bucket"], max_bucket_size, "minhash_lsh_pairs"
-        )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    cand = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.bucket") == F.col("r.bucket"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b"))
-    jacc = F.size(F.array_intersect("__sh_a", "__sh_b")) / F.size(
-        F.array_union("__sh_a", "__sh_b")
-    )
-    # same quantity, but |A∪B| = |A|+|B|-|A∩B| — the screen never
-    # allocates the union ARRAY (array_union materializes it per pair)
-    inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
-    jacc_screen = inter / (
-        F.size("__sh_a") + F.size("__sh_b") - inter
+    cand = _block_pairs(
+        _band_table(sh, id_col, num_hashes, bands, pre_hashed=hashed_verify),
+        ["band", "bucket"],
+        cap=max_bucket_size,
+        op="minhash_lsh_pairs",
     )
     if not hashed_verify:
-        return (
-            cand.join(a, "id_a")
-            .join(b, "id_b")
-            .withColumn("jaccard", jacc)
-            .where(F.col("jaccard") >= jaccard_threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
+        return _verify_pairs(
+            cand, sh, sh, "jaccard", _jaccard,
+            F.col("jaccard") >= jaccard_threshold,
+        ).select("id_a", "id_b", "jaccard")
+
     # tier 1: screen every banding candidate in hash space (longs, not
-    # strings), with the margin absorbing hash-collision jitter
-    screened = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .where(jacc_screen >= jaccard_threshold - screen_margin)
-        .select("id_a", "id_b")
-    )
+    # strings), with the margin absorbing hash-collision jitter. Same
+    # quantity as _jaccard, but |A∪B| = |A|+|B|-|A∩B| — the screen never
+    # allocates the union ARRAY (array_union materializes it per pair)
+    def jaccard_screen(a, b):
+        inter = F.size(F.array_intersect(a, b))
+        return inter / (F.size(a) + F.size(b) - inter)
+
+    screened = _verify_pairs(
+        cand, sh, sh, "__screen", jaccard_screen,
+        F.col("__screen") >= jaccard_threshold - screen_margin,
+    ).select("id_a", "id_b")
     # tier 2: exact STRING verify on survivors only — semi-join the
     # survivor ids back to the input (broadcast: survivors ≈ true
     # pairs) so the string shingle pass runs over matched rows, never
@@ -473,19 +537,10 @@ def minhash_lsh_pairs(
     slim = df.join(F.broadcast(ids), id_col).select(
         F.col(id_col), str_sh.alias("__s")
     )
-    sa = slim.select(F.col(id_col).alias("id_a"), F.col("__s").alias("__s_a"))
-    sb = slim.select(F.col(id_col).alias("id_b"), F.col("__s").alias("__s_b"))
-    return (
-        sa.join(F.broadcast(screened), "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("__s_a", "__s_b"))
-            / F.size(F.array_union("__s_a", "__s_b")),
-        )
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_pairs(
+        F.broadcast(screened), slim, slim, "jaccard", _jaccard,
+        F.col("jaccard") >= jaccard_threshold,
+    ).select("id_a", "id_b", "jaccard")
 
 
 def minhash_dedup(
@@ -552,45 +607,25 @@ def minhash_lsh_pairs_incremental(
     The candidate join is new-banded ⋈ index-banded on (band, bucket) —
     cost proportional to bucket collisions, never |new| × |index|. With
     AQE the small (shard) side broadcasts. ``max_bucket_size`` caps hot
-    index buckets exactly like the self-join variant (logged, never
-    silent; recall is no longer guaranteed above the cap).
+    INDEX buckets only, like the self-join variant (logged, never
+    silent; pairs only findable through a capped bucket are lost).
     """
-    sh_ix = index.select(
-        F.col(id_col), shingles(F.col(text_col), n=shingle_n).alias("__sh")
-    ).where(F.size("__sh") > 0)
-    sh_new = new.select(
-        F.col(id_col), shingles(F.col(text_col), n=shingle_n).alias("__sh")
-    ).where(F.size("__sh") > 0)
-    b_ix = _band_table(sh_ix, id_col, num_hashes, bands)
-    if max_bucket_size is not None:
-        b_ix = _cap_buckets(
-            b_ix, ["band", "bucket"], max_bucket_size,
-            "minhash_lsh_pairs_incremental",
-        )
-    b_new = _band_table(sh_new, id_col, num_hashes, bands)
-    n = b_new.select(
-        F.col(id_col).alias("new_id"), "band", "bucket"
-    ).alias("n")
-    x = b_ix.select(
-        F.col(id_col).alias("index_id"), "band", "bucket"
-    ).alias("x")
-    cand = (
-        n.join(x, on=["band", "bucket"])
-        .select("new_id", "index_id")
-        .distinct()
+    str_sh = shingles(F.col(text_col), n=shingle_n)
+    sh_ix = _shingle_table(index, id_col, str_sh)
+    sh_new = _shingle_table(new, id_col, str_sh)
+    cand = _block_pairs(
+        _band_table(sh_ix, id_col, num_hashes, bands),
+        ["band", "bucket"],
+        _band_table(sh_new, id_col, num_hashes, bands),
+        cap=max_bucket_size,
+        op="minhash_lsh_pairs_incremental",
     )
-    a = sh_new.select(F.col(id_col).alias("new_id"), F.col("__sh").alias("__sh_a"))
-    b = sh_ix.select(F.col(id_col).alias("index_id"), F.col("__sh").alias("__sh_b"))
-    return (
-        cand.join(a, "new_id")
-        .join(b, "index_id")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("__sh_a", "__sh_b"))
-            / F.size(F.array_union("__sh_a", "__sh_b")),
-        )
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("new_id", "index_id", "jaccard")
+    return _verify_pairs(
+        cand, sh_ix, sh_new, "jaccard", _jaccard,
+        F.col("jaccard") >= jaccard_threshold,
+    ).select(
+        F.col("id_b").alias("new_id"), F.col("id_a").alias("index_id"),
+        "jaccard",
     )
 
 
@@ -718,28 +753,13 @@ def simhash_neardup_pairs(
         )
         off += w
     keyed = sim.select(
-        id_col, "__sim", F.explode(F.array(*bands)).alias("__bb")
-    ).select(id_col, "__sim", "__bb.band", "__bb.val")
-    a, b = keyed.alias("a"), keyed.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.val") == F.col("b.val"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.bit_count(
-                F.col("a.__sim").bitwiseXOR(F.col("b.__sim"))
-            ).alias("hamming"),
-        )
-        .where(F.col("hamming") <= hamming_k)
-        .dropDuplicates(["id_a", "id_b"])
-    )
+        id_col, F.explode(F.array(*bands)).alias("__bb")
+    ).select(id_col, "__bb.band", "__bb.val")
+    return _verify_pairs(
+        _block_pairs(keyed, ["band", "val"]), sim, sim, "hamming",
+        lambda a, b: F.bit_count(a.bitwiseXOR(b)),
+        F.col("hamming") <= hamming_k,
+    ).select("id_a", "id_b", "hamming")
 
 
 def ngram_jaccard_pairs(
@@ -753,9 +773,7 @@ def ngram_jaccard_pairs(
     """Exact all-pairs n-gram Jaccard above a threshold. O(n²) self-join —
     for small candidate sets or verification; at corpus scale use
     minhash_lsh_pairs which prunes candidates first."""
-    sh = df.select(
-        F.col(id_col), shingles(F.col(text_col), n=shingle_n).alias("__sh")
-    ).where(F.size("__sh") > 0)
+    sh = _shingle_table(df, id_col, shingles(F.col(text_col), n=shingle_n))
     # The broadcast nested-loop join parallelizes over PROBE-side
     # partitions; a small candidate set usually arrives as one partition
     # (one parquet split), which would serialize the whole O(n²) compare
@@ -771,11 +789,7 @@ def ngram_jaccard_pairs(
     b = sh.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("__sh_a", "__sh_b"))
-            / F.size(F.array_union("__sh_a", "__sh_b")),
-        )
+        .withColumn("jaccard", _jaccard(F.col("__sh_a"), F.col("__sh_b")))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -817,8 +831,9 @@ def ngram_jaccard_pairs_indexed(
     Phase-1 cost is Σ_shingle df(s)² over shared shingles; a boilerplate
     shingle appearing in B docs contributes B² join rows.
     ``max_shingle_df`` guards that blow-up: shingles whose document
-    frequency exceeds the cap are dropped from the INDEX (logged, never
-    silent — mirroring ``_cap_buckets``). Capped shingles still count
+    frequency exceeds the cap are dropped from the INDEX by
+    ``_cap_buckets`` on the shingle STRINGS (logged, never silent), and
+    the index then blocks on their hashes uncapped. Capped shingles still count
     toward ``|A|``/``|B|`` but not the intersection (verification
     rebuilds arrays from the capped index), so reported jaccard becomes a
     LOWER bound: pairs may be missed, never falsely emitted.
@@ -845,13 +860,9 @@ def ngram_jaccard_pairs_indexed(
     # manager. The one eager job this runs at call time is documented
     # behavior (``max_shingle_df``'s cap, by contrast, is lazy — see
     # ``_cap_buckets``).
-    sh = (
-        df.select(
-            F.col(id_col), shingles(F.col(text_col), n=shingle_n).alias("__sh")
-        )
-        .where(F.size("__sh") > 0)
-        .localCheckpoint()
-    )
+    sh = _shingle_table(
+        df, id_col, shingles(F.col(text_col), n=shingle_n)
+    ).localCheckpoint()
     sizes = sh.select(F.col(id_col), F.size("__sh").alias("__n"))
     if max_shingle_df is not None:
         inv = _cap_buckets(
@@ -877,49 +888,35 @@ def ngram_jaccard_pairs_indexed(
                 F.transform(F.col("__sh"), lambda s: hash_fn(s))
             ).alias("__h"),
         )
-    a = inv_h.select(F.col(id_col).alias("id_a"), "__h")
-    b = inv_h.select(F.col(id_col).alias("id_b"), "__h")
-    inter_h = (
-        a.join(b, on=["__h"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("__ih"))
-    )
     na = sizes.select(F.col(id_col).alias("id_a"), F.col("__n").alias("__na"))
     nb = sizes.select(F.col(id_col).alias("id_b"), F.col("__n").alias("__nb"))
     candidates = (
-        inter_h.join(na, "id_a")
+        _block_pairs(inv_h, ["__h"])
+        .join(na, "id_a")
         .join(nb, "id_b")
         # clamp the hash-match count to min(|A|,|B|): collisions can push
-        # __ih past the true intersection bound, and x/(na+nb-x) stops
+        # it past the true intersection bound, and x/(na+nb-x) stops
         # being monotone (goes negative) once x > na+nb — an inflated
         # count must only ever RAISE the candidate jaccard, never drop a
-        # true pair. least(__ih, na, nb) ≥ true intersection still holds,
-        # and f is increasing on [0, min(na, nb)], so the superset
+        # true pair. least(shared, na, nb) ≥ true intersection still
+        # holds, and f is increasing on [0, min(na, nb)], so the superset
         # guarantee survives arbitrary collision rates.
-        .withColumn("__ihc", F.least("__ih", "__na", "__nb"))
+        .withColumn("__ihc", F.least("shared", "__na", "__nb"))
         .where(
             F.col("__ihc") / (F.col("__na") + F.col("__nb") - F.col("__ihc"))
             >= threshold
         )
         .select("id_a", "id_b", "__na", "__nb")
     )
-    va = verify.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sh_a"))
-    vb = verify.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__sh_b"))
-    return (
-        candidates.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn(
-            "__inter", F.size(F.array_intersect("__sh_a", "__sh_b"))
-        )
-        .withColumn(
-            "jaccard",
-            F.col("__inter")
-            / (F.col("__na") + F.col("__nb") - F.col("__inter")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+
+    def jaccard(a, b):
+        inter = F.size(F.array_intersect(a, b))
+        return inter / (F.col("__na") + F.col("__nb") - inter)
+
+    return _verify_pairs(
+        candidates, verify, verify, "jaccard", jaccard,
+        F.col("jaccard") >= threshold,
+    ).select("id_a", "id_b", "jaccard")
 
 
 def keep_best_per_cluster(

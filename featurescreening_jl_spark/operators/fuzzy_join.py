@@ -16,15 +16,21 @@ is exactly the brute-force result):
 The candidate generator is an inverted q-gram index join — cost tracks
 gram-key collisions, never |L|×|R|. Hot grams (the stop-gram skew of
 every inverted index) are handled SOUNDLY: grams with document
-frequency above ``max_gram_df`` are dropped from the index, and the
+frequency above ``max_gram_df`` (found, and logged, by the shared
+hot-key guard ``dedup._hot_keys``) are dropped from the index, and the
 count bound is lowered per pair by ``min(dropped_a, dropped_b)`` — the
 maximum shared mass the dropped grams could have carried — so pruning
 stays a superset filter (the cap trades candidate precision for index
 balance, never recall; pinned by test).
 
-Verify joins the surviving id pairs back to the texts and keeps
-``levenshtein(a, b, k) != -1`` — Spark's thresholded (banded O(k·n))
-form, not the full O(n²) DP.
+Verify (``dedup._verify_pairs``) joins the surviving id pairs back to the
+texts and keeps ``levenshtein(a, b, k) != -1`` — Spark's thresholded
+(banded O(k·n)) form, not the full O(n²) DP.
+
+Both candidate generators keep their own index join rather than
+``dedup._block_pairs``: the count bound needs the multiset mass
+``sum(least(cnt_a, cnt_b))`` grouped with both lengths, and the prefix
+path needs the length window on each prefix hit.
 
 Strings shorter than ``q + k`` make the count bound vacuous (≤ 0); they
 simply pass filter 2 and are decided by the length window + verify —
@@ -53,7 +59,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from featurescreening_jl_spark.operators.dedup import _hot_keys, _verify_pairs
+
 __all__ = ["edit_distance_join"]
+
+
+def _gram_hashes(t, q: int):
+    """The 64-bit hashes of ``t``'s overlapping char q-grams, in order."""
+    return F.transform(
+        F.sequence(F.lit(1), F.greatest(F.length(t) - q + 1, F.lit(0))),
+        lambda i: F.xxhash64(t.substr(i, F.lit(q))),
+    )
 
 
 def _gram_counts(df: DataFrame, id_col: str, text_col: str, q: int):
@@ -64,15 +80,11 @@ def _gram_counts(df: DataFrame, id_col: str, text_col: str, q: int):
     (min(a1+a2, b1+b2) ≥ min(a1,b1) + min(a2,b2)) — the count filter
     stays a sound superset, and verify decides membership regardless."""
     t = F.col(text_col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - q + 1, F.lit(0))),
-        lambda i: F.xxhash64(t.substr(i, F.lit(q))),
-    )
     return (
         df.select(
             F.col(id_col).alias("__id"),
             F.length(t).alias("__len"),
-            F.explode(grams).alias("__gram"),
+            F.explode(_gram_hashes(t, q)).alias("__gram"),
         )
         .groupBy("__id", "__len", "__gram")
         .agg(F.count(F.lit(1)).alias("__cnt"))
@@ -97,6 +109,11 @@ def edit_distance_join(
     self-joins filter ``id_a < id_b`` themselves). Output equals the
     brute-force cross-product filter exactly; see module docstring for
     why the pruning is lossless.
+
+    ``max_gram_df`` drops the grams held by more than that many strings
+    (both sides counted) from the count-bound index. The per-pair slack
+    keeps it lossless; the cap is logged as "capped" like every hot-key
+    cap.
 
     ``prefix_filter=True`` switches candidate generation to the ed-join
     prefix filter (Xiao et al., EDBT 2008): each string indexes only its
@@ -129,24 +146,23 @@ def edit_distance_join(
     lb = _gram_counts(right, id_col, text_col, q)
 
     if max_gram_df is not None:
-        # global df over BOTH sides; dropped mass is tracked per string
-        # so the bound can be lowered soundly
-        df_tab = (
-            la.select("__gram")
-            .unionByName(lb.select("__gram"))
-            .groupBy("__gram")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") > max_gram_df)
-            .select("__gram")
+        # global df over BOTH sides (one row per string and distinct
+        # gram); dropped mass is tracked per string so the bound can be
+        # lowered soundly
+        hot = F.broadcast(
+            _hot_keys(
+                la.select("__gram").unionByName(lb.select("__gram")),
+                ["__gram"], max_gram_df, "edit_distance_join",
+            )
         )
 
         def split(g):
             dropped = (
-                g.join(F.broadcast(df_tab), "__gram", "left_semi")
+                g.join(hot, "__gram", "left_semi")
                 .groupBy("__id", "__len")
                 .agg(F.sum("__cnt").alias("__dropped"))
             )
-            kept = g.join(F.broadcast(df_tab), "__gram", "left_anti")
+            kept = g.join(hot, "__gram", "left_anti")
             return kept, dropped
 
         la, da = split(la)
@@ -254,40 +270,16 @@ def edit_distance_join(
         )
         ids = ids.unionByName(hot_pairs)
 
-    ids = ids.distinct()
-    ta = left.select(
-        F.col(id_col).alias("id_a"), F.col(text_col).alias("__ta")
-    )
-    tb = right.select(
-        F.col(id_col).alias("id_b"), F.col(text_col).alias("__tb")
-    )
-    dist = F.levenshtein("__ta", "__tb", k)
-    return (
-        ids.join(ta, "id_a")
-        .join(tb, "id_b")
-        .withColumn("dist", dist)
-        .where(F.col("dist") >= 0)
-        .select("id_a", "id_b", F.col("dist").cast("int").alias("dist"))
-    )
+    return _verify_edits(ids.distinct(), left, right, id_col, text_col, k)
 
 
-def _verify_pairs(ids, left, right, id_col, text_col, k):
+def _verify_edits(ids, left, right, id_col, text_col, k):
     """Exact membership: join candidate ids back to texts, keep banded
-    levenshtein ≤ k."""
-    ta = left.select(
-        F.col(id_col).alias("id_a"), F.col(text_col).alias("__ta")
-    )
-    tb = right.select(
-        F.col(id_col).alias("id_b"), F.col(text_col).alias("__tb")
-    )
-    dist = F.levenshtein("__ta", "__tb", k)
-    return (
-        ids.join(ta, "id_a")
-        .join(tb, "id_b")
-        .withColumn("dist", dist)
-        .where(F.col("dist") >= 0)
-        .select("id_a", "id_b", F.col("dist").cast("int").alias("dist"))
-    )
+    levenshtein ≤ k (``-1`` means over the band)."""
+    return _verify_pairs(
+        ids, left.select(id_col, text_col), right.select(id_col, text_col),
+        "dist", lambda a, b: F.levenshtein(a, b, k), F.col("dist") >= 0,
+    ).select("id_a", "id_b", F.col("dist").cast("int").alias("dist"))
 
 
 def _prefix_filter_join(left, right, id_col, text_col, *, k, q):
@@ -305,15 +297,7 @@ def _prefix_filter_join(left, right, id_col, text_col, *, k, q):
 
     def distinct_grams(df, ida, lena):
         t = F.col(text_col)
-        grams = F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(F.length(t) - q + 1, F.lit(0)),
-                ),
-                lambda i: F.xxhash64(t.substr(i, F.lit(q))),
-            )
-        )
+        grams = F.array_distinct(_gram_hashes(t, q))
         return df.select(
             F.col(id_col).alias(ida),
             F.length(t).alias(lena),
@@ -395,4 +379,4 @@ def _prefix_filter_join(left, right, id_col, text_col, *, k, q):
         ).select("id_a", "id_b")
     )
     ids = cand.unionByName(small_x).unionByName(x_small).distinct()
-    return _verify_pairs(ids, left, right, id_col, text_col, k)
+    return _verify_edits(ids, left, right, id_col, text_col, k)

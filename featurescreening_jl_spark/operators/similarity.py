@@ -22,6 +22,10 @@ from featurescreening_jl_spark.functions.vector import (
     double_array_literal,
     norm,
 )
+from featurescreening_jl_spark.operators.dedup import (
+    _block_pairs,
+    _verify_pairs,
+)
 
 __all__ = [
     "brute_force_topk",
@@ -222,51 +226,30 @@ def cosine_neardup_pairs(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs (cosine ≥ threshold), bucketed by
-    sign-LSH so the self-join runs within buckets, not across the corpus.
+    sign-LSH so the self-join runs within buckets, not across the corpus:
+    the (table, bucket) keys go through ``dedup._block_pairs``, and only
+    the unique pairs fetch their vectors for the exact cosine.
 
     ``max_bucket_size`` guards the O(bucket²) self-join against hot
     buckets (e.g. millions of near-identical boilerplate embeddings);
-    capped buckets are excluded and logged — see
-    ``dedup._cap_buckets`` for the recall trade-off."""
+    capped buckets are excluded and logged (``dedup._hot_keys``). Pairs
+    only findable through a capped bucket are lost."""
     dim = _require_dim(dim, "cosine_neardup_pairs")
     tables = [_hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
     keyed = df.select(
         id_col,
-        vec_col,
         F.posexplode(_table_buckets(F.col(vec_col), tables)).alias(
             "table", "bucket"
         ),
     )
-    if max_bucket_size is not None:
-        from featurescreening_jl_spark.operators.dedup import _cap_buckets
-
-        keyed = _cap_buckets(
-            keyed, ["table", "bucket"], max_bucket_size,
-            "cosine_neardup_pairs",
-        )
-    a = keyed.alias("a")
-    b = keyed.alias("b")
-    pairs = (
-        a.join(
-            b,
-            on=[
-                F.col("a.table") == F.col("b.table"),
-                F.col("a.bucket") == F.col("b.bucket"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col(f"a.{vec_col}").alias("__va"),
-            F.col(f"b.{vec_col}").alias("__vb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("similarity", cosine(F.col("__va"), F.col("__vb")))
-        .where(F.col("similarity") >= threshold)
-        .select("id_a", "id_b", "similarity")
-    )
-    return pairs
+    vecs = df.select(id_col, vec_col)
+    return _verify_pairs(
+        _block_pairs(
+            keyed, ["table", "bucket"],
+            cap=max_bucket_size, op="cosine_neardup_pairs",
+        ),
+        vecs, vecs, "similarity", cosine, F.col("similarity") >= threshold,
+    ).select("id_a", "id_b", "similarity")
 
 
 def pool_embeddings(

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "token_count",
-    "char_count",
     "quality_features",
     "language_id",
     "fingerprint",
@@ -88,10 +87,6 @@ def bpe_ish_token_count(text: Column) -> Column:
     letters, runs of digits, and individual punctuation marks)."""
     pieces = F.regexp_extract_all(text, F.lit(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"), 0)
     return F.size(pieces)
-
-
-def char_count(text: Column) -> Column:
-    return F.length(text)
 
 
 def quality_features(text: Column) -> dict[str, Column]:

@@ -94,9 +94,3 @@ def get_spark(
     for key, val in extra.items():
         builder = builder.config(key, val)
     return builder.getOrCreate()
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -112,9 +112,13 @@ class TestEditDistanceJoin:
         assert got == _brute(spark, docs, docs, 1)
         assert (1, 2, 1) in got
 
-    def test_gram_df_cap_is_lossless(self, spark):
+    def test_gram_df_cap_is_lossless(self, spark, caplog):
         """dropping hot grams lowers the bound by the dropped mass — the
-        cap must change candidates, never results"""
+        cap must change candidates, never results — and the cap is
+        reported like every other hot-key cap"""
+        import logging
+        import time
+
         from featurescreening_jl_spark.operators.fuzzy_join import (
             edit_distance_join,
         )
@@ -123,15 +127,30 @@ class TestEditDistanceJoin:
         a = set(
             map(tuple, edit_distance_join(docs, docs, max_dist=2).collect())
         )
-        b = set(
-            map(
-                tuple,
-                edit_distance_join(
-                    docs, docs, max_dist=2, max_gram_df=3
-                ).collect(),
+        with caplog.at_level(
+            logging.WARNING,
+            logger="featurescreening_jl_spark.operators.dedup",
+        ):
+            b = set(
+                map(
+                    tuple,
+                    edit_distance_join(
+                        docs, docs, max_dist=2, max_gram_df=3
+                    ).collect(),
+                )
             )
-        )
+            # the report is logged by a daemon thread a hair after the
+            # action returns
+            deadline = time.monotonic() + 10
+            while time.monotonic() < deadline and not any(
+                "capped" in r.message for r in caplog.records
+            ):
+                time.sleep(0.05)
         assert a == b
+        assert any(
+            "capped" in r.message and "edit_distance_join" in r.message
+            for r in caplog.records
+        )
 
     def test_cross_table_and_zero_k(self, spark):
         from featurescreening_jl_spark.operators.fuzzy_join import (

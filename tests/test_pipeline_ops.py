@@ -589,24 +589,73 @@ def _wait_for_cap_log(caplog, timeout: float = 10.0) -> None:
         time.sleep(0.05)
 
 
+_BOILER = "same boring boilerplate text repeated verbatim here"
+_BASE = "alpha beta gamma delta epsilon zeta eta theta"
+
+
+def _capped_minhash(spark):
+    rows = [(i, _BOILER) for i in range(12)]
+    rows += [(100, _BASE), (101, _BASE + " iota")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    out = minhash_lsh_pairs(
+        df, jaccard_threshold=0.5, shingle_n=2, max_bucket_size=5,
+    )
+    return {(r.id_a, r.id_b) for r in out.toPandas().itertuples()}
+
+
+def _capped_minhash_incremental(spark):
+    from featurescreening_jl_spark.operators.dedup import (
+        minhash_lsh_pairs_incremental,
+    )
+
+    schema = "doc_id long, text string"
+    # the hot bucket sits on the INDEX side; new doc 99 would pair with
+    # all 12 boilerplate index docs through it
+    index = spark.createDataFrame(
+        [(i, _BOILER) for i in range(12)] + [(100, _BASE)], schema
+    )
+    new = spark.createDataFrame(
+        [(99, _BOILER), (101, _BASE + " iota")], schema
+    )
+    out = minhash_lsh_pairs_incremental(
+        index, new, jaccard_threshold=0.5, shingle_n=2, max_bucket_size=5,
+    )
+    return {
+        tuple(sorted((r.new_id, r.index_id)))
+        for r in out.toPandas().itertuples()
+    }
+
+
+def _capped_cosine(spark):
+    # identical vectors share a bucket in every table: one hot bucket
+    # per table
+    rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(12)]
+    rows += [(100, [0.0, 1.0, 0.2, 0.1]), (101, [0.0, 1.0, 0.21, 0.1])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = cosine_neardup_pairs(df, threshold=0.95, dim=4, max_bucket_size=5)
+    return {(r.id_a, r.id_b) for r in out.toPandas().itertuples()}
+
+
 class TestBucketCap:
-    def test_hot_bucket_capped_and_logged(self, spark, caplog):
+    @pytest.mark.parametrize(
+        "capped_pairs",
+        [_capped_minhash, _capped_minhash_incremental, _capped_cosine],
+        ids=[
+            "minhash_lsh_pairs",
+            "minhash_lsh_pairs_incremental",
+            "cosine_neardup_pairs",
+        ],
+    )
+    def test_hot_bucket_capped_and_logged(self, spark, caplog, capped_pairs):
         import logging
 
-        # 12 identical docs = one hot bucket in every band; 2 distinct
-        # near-dups that must still be found when the hot bucket is capped
-        base = "alpha beta gamma delta epsilon zeta eta theta"
-        rows = [(i, "same boring boilerplate text repeated verbatim here")
-                for i in range(12)]
-        rows += [(100, base), (101, base + " iota")]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
+        # 12 identical rows = one hot bucket per band/table; 2 distinct
+        # near-dups (100, 101) that must still be found when the hot
+        # bucket is capped
         with caplog.at_level(logging.WARNING,
                              logger="featurescreening_jl_spark.operators.dedup"):
-            pairs = minhash_lsh_pairs(
-                df, jaccard_threshold=0.5, shingle_n=2, max_bucket_size=5,
-            ).toPandas()
+            got = capped_pairs(spark)
             _wait_for_cap_log(caplog)
-        got = {(r.id_a, r.id_b) for r in pairs.itertuples()}
         assert (100, 101) in got
         # the capped boilerplate pairs are gone (bucket size 12 > cap 5)
         assert not any(a < 100 and b < 100 for a, b in got)
@@ -634,6 +683,53 @@ class TestBucketCap:
         # no NEW cached tables (<=: the ContextCleaner may concurrently
         # release earlier tests' localCheckpoint RDDs, shrinking the set)
         assert after <= before
+
+
+class TestBlockPairs:
+    """The blocking join under every pair producer, on a hand-built keyed
+    frame whose expected pairs and shared-key counts are written out."""
+
+    @pytest.fixture()
+    def keyed(self, spark):
+        # id 1 holds key (0, "x") twice; id 3 holds (1, "z") twice
+        rows = [
+            (1, 0, "x"), (1, 0, "x"), (1, 1, "y"),
+            (2, 0, "x"), (2, 1, "y"),
+            (3, 1, "z"), (3, 1, "z"),
+            (4, 1, "z"),
+        ]
+        return spark.createDataFrame(rows, "id long, band int, val string")
+
+    def test_self_mode_unique_ordered_pairs(self, spark, keyed):
+        from featurescreening_jl_spark.operators.dedup import _block_pairs
+
+        got = [
+            tuple(r)
+            for r in _block_pairs(keyed, ["band", "val"])
+            .select("id_a", "id_b", "shared").collect()
+        ]
+        # each unordered pair once, id_a < id_b, never (x, x) — id 3's
+        # repeated key pairs it with nothing but id 4; shared counts
+        # matches with multiplicity: (1, 2) = 2·1 on (0,x) + 1·1 on (1,y)
+        assert sorted(got) == [(1, 2, 3), (3, 4, 2)]
+
+    def test_cross_mode_keeps_identical_ids(self, spark, keyed):
+        from featurescreening_jl_spark.operators.dedup import _block_pairs
+
+        other = spark.createDataFrame(
+            [(1, 0, "x"), (2, 1, "z"), (5, 1, "y")],
+            "oid long, band int, val string",
+        )
+        got = {
+            tuple(r)
+            for r in _block_pairs(keyed, ["band", "val"], other)
+            .select("id_a", "id_b", "shared").collect()
+        }
+        assert got == {
+            (1, 1, 2), (2, 1, 1),  # (0, x): id 1 twice, id 2 once
+            (1, 5, 1), (2, 5, 1),  # (1, y)
+            (3, 2, 2), (4, 2, 1),  # (1, z): id 3 twice, id 4 once
+        }
 
 
 class TestHotShingleCap:
