@@ -227,15 +227,6 @@ class FeatureFrame:
         ).join(right, on=self.id_col, how="inner")
         return self._child(joined, merged_names)
 
-    def empty_projection(self) -> "FeatureFrame":
-        """Zero feature columns, all rows — the screening loop's initial
-        accumulator (reference ``@view fs[:, N[]]``)."""
-        return self.select_features([])
-
-    def cache(self) -> "FeatureFrame":
-        self.df.cache()
-        return self
-
     def to_pandas(self):
         cols = [self.id_col, self.label_col, *self.feature_names]
         return (

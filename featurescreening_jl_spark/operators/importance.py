@@ -42,6 +42,7 @@ __all__ = [
     "feature_importance",
     "feature_importance_from_model",
     "fit_forest",
+    "rank_counts",
     "split_counts",
     "rf_params",
 ]
@@ -165,16 +166,21 @@ def split_counts(model: RandomForestClassificationModel) -> Counter:
     return Counter(int(m) for m in _IF_FEATURE.findall(debug))
 
 
+def rank_counts(names: list[str], counts) -> list[tuple[str, int]]:
+    """Ranked ``(feature_name, split_count)`` pairs from ``counts[i]``, the
+    split count of column ``i`` (a ``Counter`` or a dense vector): count
+    desc, original column position asc on ties (deterministic total
+    order); never-split features absent."""
+    order = sorted(range(len(names)), key=lambda i: (-counts[i], i))
+    return [(names[i], int(counts[i])) for i in order if counts[i] > 0]
+
+
 def feature_importance_from_model(
     model: RandomForestClassificationModel, names: list[str]
 ) -> list[tuple[str, int]]:
-    """Ranked ``(feature_name, split_count)`` pairs, count desc, original
-    column position asc on ties (deterministic total order)."""
-    counts = split_counts(model)
-    pairs = [(names[i], c) for i, c in counts.items()]
-    pos = {n: i for i, n in enumerate(names)}
-    pairs.sort(key=lambda p: (-p[1], pos[p[0]]))
-    return pairs
+    """Ranked ``(feature_name, split_count)`` pairs of a fitted forest, in
+    the :func:`rank_counts` order."""
+    return rank_counts(names, split_counts(model))
 
 
 def feature_importance(

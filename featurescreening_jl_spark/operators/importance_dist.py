@@ -17,12 +17,16 @@ work and the driver only sums integers:
   ``bincount`` per (node, candidate-feature), no Python-per-row work)
   inside one Arrow-batched ``mapInPandas`` pass — a MAP-ONLY stage, zero
   shuffles during training;
-- each task emits its per-feature split counts; split frequency is
-  ADDITIVE across sub-forests, so a tiny ``groupBy(feature).sum()``
-  (shuffling ≤ n_features rows per partition) yields exactly the same
-  statistic the reference folds out of one big forest
+- each task emits ONE row: its partition id and the dense vector of its
+  sub-forest's split counts over the candidate features. The rows are
+  collected as they are (one Spark job, no exchange after training) into
+  a P × candidates count matrix. Split frequency is ADDITIVE across
+  sub-forests, so the driver's column sum is exactly the statistic the
+  reference folds out of one big forest
   (/root/reference/src/importance.jl:62-94): occurrences of each feature
-  as an internal split node.
+  as an internal split node. The sum over a SUBSET of the partitions is
+  the same statistic of a smaller forest over a hash subsample of the
+  data: ``operators/stability.py`` draws its folds that way.
 
 Statistical model delta (documented, deliberate): trees see bootstrap
 samples OF THEIR PARTITION rather than of the whole table — the standard
@@ -47,6 +51,7 @@ import pandas as pd
 from featurescreening_jl_spark.frame import FeatureFrame
 from featurescreening_jl_spark.operators.importance import (
     DEFAULT_CONFIG_FOR_FEATURE_IMPORTANCE,
+    rank_counts,
 )
 from featurescreening_jl_spark.operators.selection import make_rng
 
@@ -184,25 +189,15 @@ def ensemble_layout(df, id_col: str, num_partitions: int):
     return df.repartition(num_partitions, id_col).sortWithinPartitions(id_col)
 
 
-def feature_importance_partitioned(
+def _split_count_matrix(
     ff: FeatureFrame,
-    config: Optional[dict[str, Any]] = None,
-    rng: Any = None,
-    *,
-    num_partitions: int = DEFAULT_ENSEMBLE_PARTITIONS,
-) -> list[tuple[str, int]]:
-    """Ranked ``(feature_name, split_count)`` via the partition ensemble.
-
-    ``config['n_trees']`` is the TOTAL tree budget, split evenly across
-    ``num_partitions`` (≥1 tree each). Ranking contract matches the MLlib
-    backend: count desc, original column position asc; never-split
-    features absent.
-
-    The training input always gets :func:`ensemble_layout`. Over a cache
-    already in that layout with the same ``num_partitions`` (the screening
-    loop's base) the training stage is MAP-ONLY, zero shuffles; any other
-    input pays one exchange.
-    """
+    config: Optional[dict[str, Any]],
+    rng: Any,
+    num_partitions: int,
+) -> np.ndarray:
+    """``(num_partitions, n_features)`` int64 matrix: row ``p`` holds the
+    split counts of partition ``p``'s sub-forest (all zero for an empty
+    partition). One Spark job over an input already in the layout."""
     from pyspark.sql import functions as F
 
     seed = int(make_rng(rng).integers(0, 2**31 - 1))
@@ -238,21 +233,36 @@ def feature_importance_partitioned(
         yv = pdf["__y"].to_numpy(dtype=np.int64)
         gen = np.random.default_rng(np.random.SeedSequence([seed, pid]))
         counts = local_forest_split_counts(X, yv, n_classes, cfg, gen)
-        if counts:
-            ks = sorted(counts)
-            yield pd.DataFrame(
-                {"feature_idx": ks, "cnt": [counts[k] for k in ks]}
-            )
+        dense = [counts[j] for j in range(len(names))]
+        yield pd.DataFrame({"pid": [pid], "counts": [dense]})
 
-    # the layout fixes partition contents; the mapInPandas stage is
-    # map-only, the reduce below moves ≤ n_features rows/partition
-    agg = (
-        proj.mapInPandas(train, schema="feature_idx int, cnt long")
-        .groupBy("feature_idx")
-        .agg(F.sum("cnt").alias("cnt"))
-        .collect()
-    )
-    pairs = [(names[r["feature_idx"]], int(r["cnt"])) for r in agg]
-    pos = {n: i for i, n in enumerate(names)}
-    pairs.sort(key=lambda p: (-p[1], pos[p[0]]))
-    return pairs
+    # the layout fixes partition contents; the stage is map-only and its
+    # P rows are collected as they are
+    rows = proj.mapInPandas(train, "pid int, counts array<long>").collect()
+    matrix = np.zeros((num_partitions, len(names)), dtype=np.int64)
+    for r in rows:
+        matrix[r["pid"]] = r["counts"]
+    return matrix
+
+
+def feature_importance_partitioned(
+    ff: FeatureFrame,
+    config: Optional[dict[str, Any]] = None,
+    rng: Any = None,
+    *,
+    num_partitions: int = DEFAULT_ENSEMBLE_PARTITIONS,
+) -> list[tuple[str, int]]:
+    """Ranked ``(feature_name, split_count)`` via the partition ensemble.
+
+    ``config['n_trees']`` is the TOTAL tree budget, split evenly across
+    ``num_partitions`` (≥1 tree each). Ranking contract matches the MLlib
+    backend (``importance.rank_counts``): count desc, original column
+    position asc; never-split features absent.
+
+    The training input always gets :func:`ensemble_layout`. Over a cache
+    already in that layout with the same ``num_partitions`` (the screening
+    loop's base) the fit is one MAP-ONLY Spark job, zero shuffles; any
+    other input pays one exchange.
+    """
+    matrix = _split_count_matrix(ff, config, rng, num_partitions)
+    return rank_counts(ff.feature_names, matrix.sum(axis=0))

@@ -1,38 +1,38 @@
-"""Stability selection over the screening importance backends.
+"""Stability selection over the partition-ensemble split counts.
 
 Meinshausen & Bühlmann's stability selection (JRSS-B 2010), adapted to
 the reference's split-count importance (reference semantics:
 `/root/reference/src/importance.jl:42-50` ranks by split frequency; this
-module asks how STABLE that ranking is under data perturbation): fit the
-forest on ``n_folds`` deterministic half-subsamples, record each fold's
+module asks how STABLE that ranking is under data perturbation): rank the
+features on ``n_folds`` random subsamples, record each fold's
 top-``top_m`` feature set, and score every feature by the fraction of
 folds that ranked it top-``top_m``. Features whose selection frequency
 clears the caller's cut are the stable set — a screening verdict that
 one lucky forest can't produce, and the standard guard against the
 winner's-curse features a single `screen` tournament can admit.
 
-Scale shape: each fold is ONE importance fit over a portable-hash
-subsample — a map-side filter on the cached frame (the MEMBERSHIP is a
-pure function of (id, fold seed), invariant to partitioning, so a
-resumed run replays identical folds; the forest fit itself is
-deterministic for a fixed partitioning, the same contract `screen`
-documents). With the
-``partitioned`` backend every fold is map-only training with additive
-counters; folds run sequentially to share the cached base frame rather
-than fight over executors. Driver-side state is one ranking per fold —
-O(n_features · n_folds) tuples, never rows.
+Scale shape: ONE partition-ensemble fit (operators/importance_dist.py)
+gives the per-partition split-count matrix. Its layout hash-partitions
+rows by id, so a subset S of the partitions is a hash subsample of the
+rows, and the summed counts of S are those of a forest of |S|·t trees
+over that subsample. Each fold is such a subset, drawn on the driver, so
+``n_folds`` costs no extra Spark work. The layout makes the result
+independent of how the input is partitioned. Driver-side state is the
+P × n_features count matrix, never rows.
 """
 
 from __future__ import annotations
 
 from typing import Any, Optional
 
-from pyspark.sql import functions as F
-
 from featurescreening_jl_spark.frame import FeatureFrame
 from featurescreening_jl_spark.operators.importance import (
-    feature_importance,
     make_rng,
+    rank_counts,
+)
+from featurescreening_jl_spark.operators.importance_dist import (
+    DEFAULT_ENSEMBLE_PARTITIONS,
+    _split_count_matrix,
 )
 
 __all__ = ["stability_select"]
@@ -46,11 +46,10 @@ def stability_select(
     subsample: float = 0.5,
     config: Optional[dict[str, Any]] = None,
     rng: Any = 42,
-    backend: str = "mllib",
-    backend_options: Optional[dict[str, Any]] = None,
+    num_partitions: int = DEFAULT_ENSEMBLE_PARTITIONS,
 ) -> list[tuple[str, float, float]]:
     """Score every feature by how often it ranks top-``top_m`` across
-    ``n_folds`` half-subsample importance fits.
+    ``n_folds`` partition-subsample rankings of one ensemble fit.
 
     Returns ``[(feature_name, selection_freq, mean_rank), ...]`` sorted
     by frequency desc, mean rank asc, original column position asc —
@@ -60,14 +59,12 @@ def stability_select(
     ``mean_rank`` averages the 0-based rank over the
     folds that selected the feature.
 
-    Folds are portable-hash subsamples: row membership in fold ``f`` is
-    ``hash_unit(id, seed_f) < subsample`` with per-fold seeds spawned
-    from ``rng`` (the screen.py seed-stream pattern) — deterministic,
-    resume-identical, and independent of how the data is partitioned.
-
-    ``backend="partitioned"`` routes each fit through
-    ``feature_importance_partitioned`` (map-only ensemble training) with
-    ``backend_options`` forwarded; ``"mllib"`` uses the Spark ML forest.
+    The fit is ``feature_importance_partitioned(ff, config, fit_seed,
+    num_partitions=num_partitions)`` with ``fit_seed`` the first draw of
+    ``rng``. Fold ``f`` is a ``rng``-drawn set of
+    ``max(1, round(subsample * num_partitions))`` partitions, ranked by
+    their summed split counts: at ``subsample=1`` every fold is the fit's
+    own ranking.
     """
     if not 0 < subsample <= 1:
         raise ValueError(f"subsample must be in (0, 1], got {subsample}")
@@ -75,43 +72,21 @@ def stability_select(
         raise ValueError(f"top_m must be positive, got {top_m}")
     if n_folds <= 0:
         raise ValueError(f"n_folds must be positive, got {n_folds}")
-
-    from featurescreening_jl_spark.operators.sampling import hash_unit
-
-    master = make_rng(rng)
-    fold_seeds = [int(master.integers(0, 2**31 - 1)) for _ in range(n_folds)]
-    fit_seeds = [int(master.integers(0, 2**31 - 1)) for _ in range(n_folds)]
-
-    if backend == "partitioned":
-        from featurescreening_jl_spark.operators.importance_dist import (
-            feature_importance_partitioned,
+    if num_partitions <= 0:
+        raise ValueError(
+            f"num_partitions must be positive, got {num_partitions}"
         )
 
-        def fit(sub_ff, seed):
-            return feature_importance_partitioned(
-                sub_ff, config, seed, **(backend_options or {})
-            )
-
-    elif backend == "mllib":
-        def fit(sub_ff, seed):
-            return feature_importance(sub_ff, config, seed)
-
-    else:
-        raise ValueError(f"unknown backend: {backend!r}")
+    master = make_rng(rng)
+    fit_seed = int(master.integers(0, 2**31 - 1))
+    matrix = _split_count_matrix(ff, config, fit_seed, num_partitions)
+    size = max(1, round(subsample * num_partitions))
 
     hits: dict[str, int] = {}
     rank_sums: dict[str, int] = {}
-    for f in range(n_folds):
-        member = hash_unit(F.col(ff.id_col), fold_seeds[f]) < F.lit(
-            float(subsample)
-        )
-        sub_ff = FeatureFrame(
-            ff.df.where(member),
-            ff.feature_names,
-            label_col=ff.label_col,
-            id_col=ff.id_col,
-        )
-        ranking = fit(sub_ff, fit_seeds[f])
+    for _ in range(n_folds):
+        fold = master.choice(num_partitions, size=size, replace=False)
+        ranking = rank_counts(ff.feature_names, matrix[fold].sum(axis=0))
         for rank, (name, _count) in enumerate(ranking[:top_m]):
             hits[name] = hits.get(name, 0) + 1
             rank_sums[name] = rank_sums.get(name, 0) + rank

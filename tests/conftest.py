@@ -56,3 +56,17 @@ def feature_frame(spark):
     ff = FeatureFrame.from_arrays(spark, y, names, X)
     ff.df.cache().count()
     return ff
+
+
+def spark_jobs(spark, group: str, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

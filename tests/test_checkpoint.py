@@ -11,7 +11,7 @@ import pytest
 from featurescreening_jl_spark.operators.screen import screen
 from featurescreening_jl_spark.sources.checkpoint import RoundCheckpoint
 
-from conftest import fixture_screen_config
+from conftest import fixture_screen_config, spark_jobs
 
 pytestmark = pytest.mark.spark
 
@@ -104,21 +104,17 @@ class TestCheckpoint:
         """A round checkpoint is the survivor write alone: its row count
         rides on the write as an Observation, and the ranking and lineage
         go to a driver-side record."""
-        sc = spark.sparkContext
         ckpt = RoundCheckpoint(str(tmp_path / "ckpt5"))
-        groups = [f"save_round-{tmp_path.name}-{i}" for i in range(3)]
-        for i, group in enumerate(groups):
+        jobs = []
+        for i in range(3):
             selected = feature_frame.select_features(feature_frame.names[i:])
-            sc.setJobGroup(group, "checkpoint round")
-            try:
-                ckpt.save_round(i, selected, [(n, 1) for n in selected.names])
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-        # job-start events reach the status store through the listener bus
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        tracker = sc.statusTracker()
-        assert [len(tracker.getJobIdsForGroup(g)) for g in groups] == [1, 1, 1]
+            jobs.append(spark_jobs(
+                spark, f"save_round-{tmp_path.name}-{i}",
+                lambda: ckpt.save_round(
+                    i, selected, [(n, 1) for n in selected.names]
+                ),
+            ))
+        assert jobs == [1, 1, 1]
         rec = json.loads(ckpt.lineage(spark).collect()[-1]["record"])
         assert rec["n_rows"] == 25 and rec["n_features"] == 9
 

@@ -20,6 +20,8 @@ from featurescreening_jl_spark.operators.importance_dist import (
 )
 from featurescreening_jl_spark.operators.screen import screen
 
+from conftest import spark_jobs
+
 CFG = {"n_trees": 64, "max_depth": 8, "min_samples_leaf": 5,
        "min_samples_split": 10, "min_purity_increase": 0.0}
 
@@ -151,6 +153,25 @@ class TestPlanShape:
             above = _above_cache(plan)
             assert above.count("Exchange") == 0, plan
             assert above.count("Sort [") == 0, plan
+
+    def test_fit_over_laid_out_cache_runs_one_job(self, spark):
+        """Each task's split counts are collected as they are: no
+        aggregation job after training."""
+        ff = _separable_frame(spark)
+        base = ensemble_layout(ff.df, ff.id_col, 8).persist()
+        try:
+            base.count()
+            laid_out = FeatureFrame(base, ff.feature_names)
+            laid_out.distinct_labels()
+            jobs = spark_jobs(
+                spark, "partitioned-fit-one-job",
+                lambda: feature_importance_partitioned(
+                    laid_out, config=CFG, rng=7, num_partitions=8
+                ),
+            )
+            assert jobs == 1
+        finally:
+            base.unpersist()
 
     def test_other_partition_count_plans_one_exchange(self, spark,
                                                       monkeypatch):

@@ -3,7 +3,8 @@ Meinshausen–Bühlmann guard over the reference's split-count importance.
 RNG-/forest-based, so verified by pytest invariants (the
 feature_importance treatment), not a SQL oracle: determinism under a
 fixed rng, separability (informative features stable, noise features
-not), fold-membership portability, and backend parity of the contract.
+not), partitioning invariance, one fit whatever ``n_folds``, and folds
+that equal the fit's own ranking when they hold every partition.
 """
 
 from __future__ import annotations
@@ -12,9 +13,13 @@ import numpy as np
 import pytest
 
 from featurescreening_jl_spark.frame import FeatureFrame
+from featurescreening_jl_spark.operators.importance import make_rng
+from featurescreening_jl_spark.operators.importance_dist import (
+    feature_importance_partitioned,
+)
 from featurescreening_jl_spark.operators.stability import stability_select
 
-from conftest import fixture_screen_config
+from conftest import fixture_screen_config, spark_jobs
 
 pytestmark = pytest.mark.spark
 
@@ -35,7 +40,8 @@ class TestStabilitySelect:
     def test_informative_features_are_stable(self, spark):
         ff = _separable_frame(spark)
         out = stability_select(
-            ff, top_m=2, n_folds=5, config=fixture_screen_config(), rng=11
+            ff, top_m=2, n_folds=5, config=fixture_screen_config(), rng=11,
+            num_partitions=4,
         )
         freq = {name: f for name, f, _ in out}
         # the two informative columns dominate every fold's top-2
@@ -57,30 +63,14 @@ class TestStabilitySelect:
         b = stability_select(
             ff, top_m=3, n_folds=3, config=fixture_screen_config(), rng=7
         )
-        assert a == b
-        # fold MEMBERSHIP is a pure function of (id, seed): reshaping the
-        # frame cannot change which rows enter which fold (the fitted
-        # forest itself is deterministic only for a fixed partitioning —
-        # the same contract screen() documents)
-        from pyspark.sql import functions as F
-
-        from featurescreening_jl_spark.operators.importance import make_rng
-        from featurescreening_jl_spark.operators.sampling import hash_unit
-
-        seed = int(make_rng(7).integers(0, 2**31 - 1))
-        member = hash_unit(F.col("sample_id"), seed) < F.lit(0.5)
-        ids_base = sorted(
-            r["sample_id"]
-            for r in ff.df.where(member).select("sample_id").collect()
+        assert a == b and a
+        # the ensemble layout hash-partitions rows by id: reshaping the
+        # input cannot change which rows a partition (and so a fold) holds
+        reshaped = FeatureFrame(ff.df.repartition(13), ff.feature_names)
+        assert a == stability_select(
+            reshaped, top_m=3, n_folds=3, config=fixture_screen_config(),
+            rng=7,
         )
-        ids_reshaped = sorted(
-            r["sample_id"]
-            for r in ff.df.repartition(13)
-            .where(member)
-            .select("sample_id")
-            .collect()
-        )
-        assert ids_base == ids_reshaped and 0 < len(ids_base) < ff.count()
 
     def test_partitioned_backend_contract(self, spark):
         ff = _separable_frame(spark, n_rows=160)
@@ -91,8 +81,7 @@ class TestStabilitySelect:
             config={"n_trees": 16, "max_depth": 6, "min_samples_leaf": 2,
                     "min_purity_increase": 0.0},
             rng=5,
-            backend="partitioned",
-            backend_options={"num_partitions": 4},
+            num_partitions=4,
         )
         freq = {name: f for name, f, _ in out}
         assert freq.get("inf_a", 0.0) >= 2 / 3
@@ -105,4 +94,36 @@ class TestStabilitySelect:
         with pytest.raises(ValueError):
             stability_select(ff, top_m=2, subsample=0.0)
         with pytest.raises(ValueError):
-            stability_select(ff, top_m=2, backend="nope")
+            stability_select(ff, top_m=2, num_partitions=0)
+
+    def test_one_fit_whatever_n_folds(self, spark):
+        """Folds are partition subsets of one fit: more folds start no
+        more Spark jobs."""
+        ff = _separable_frame(spark)
+        ff.distinct_labels()
+        jobs = [
+            spark_jobs(
+                spark, f"stability-{n}-folds",
+                lambda n=n: stability_select(
+                    ff, top_m=2, n_folds=n, config=fixture_screen_config()
+                ),
+            )
+            for n in (3, 12)
+        ]
+        assert jobs[0] == jobs[1]
+
+    def test_full_subsample_folds_equal_the_fit(self, spark):
+        ff = _separable_frame(spark)
+        cfg = fixture_screen_config()
+        fit_seed = int(make_rng(7).integers(0, 2**31 - 1))
+        ranking = feature_importance_partitioned(
+            ff, cfg, fit_seed, num_partitions=4
+        )
+        out = stability_select(
+            ff, top_m=3, n_folds=4, subsample=1.0, config=cfg, rng=7,
+            num_partitions=4,
+        )
+        assert out == [
+            (name, 1.0, float(rank))
+            for rank, (name, _count) in enumerate(ranking[:3])
+        ]
