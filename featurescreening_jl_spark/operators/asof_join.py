@@ -16,38 +16,37 @@ by data shape (SURVEY.md §2.3, §7.1 M5):
                 partition so even mega-keys don't blow memory. The
                 reference implementation the others are tested against.
 
-``merge_asof``— cogroup + ``applyInPandas`` running ``pandas.merge_asof``.
-                The cogroup key is ``hash(by) % num_groups`` — a FIXED
-                group count — not the raw key: one pandas invocation
-                handles many keys vectorized (``merge_asof(by=key)``),
-                so per-group Python overhead is amortized and group count
-                doesn't explode with key cardinality. Arrow-batched, O(n)
-                per sorted group. A single mega-key still lands whole in
-                one group — that's what ``bucketed`` is for.
-
 ``bucketed``  — the 10^12-row scale path, skew-resistant: phase 1 as-of
-                joins WITHIN each (key-salt, time-bucket) cogroup —
-                expected group size is rows-per-bucket ÷ salt_buckets and
-                does NOT grow with corpus size (grouping on the time
-                bucket ALONE, as round 1 did, makes group size grow
-                linearly with the corpus — executor OOM at 10^12 rows).
-                The hard bound: salting splits KEYS across groups, not one
-                key's rows — all of a single key's rows in one time bucket
-                land in one pandas group, so the worst-case group is the
-                HOTTEST KEY'S rows per ``bucket_seconds``. Shrink
-                ``bucket_seconds`` to bound a mega-key (verified by the
-                single-mega-key stress test in tests/test_asof.py);
-                phase 2 computes each bucket's carry-in — the last source
-                value from any strictly earlier bucket — via a per-key
-                window over the (tiny) bucket-level rollup, then patches
-                phase-1 misses. This is the "applyInPandas over
-                conv_id-salted partitions + residual merge" design from
-                BASELINE.json north_star.
+                joins WITHIN each (key-salt, time-bucket) cogroup with
+                ``pandas.merge_asof(by=key)`` — expected group size is
+                rows-per-bucket ÷ salt_buckets and does NOT grow with
+                corpus size (grouping on the time bucket ALONE, as round
+                1 did, makes group size grow linearly with the corpus —
+                executor OOM at 10^12 rows). The hard bound: salting
+                splits KEYS across groups, not one key's rows — all of a
+                single key's rows in one time bucket land in one pandas
+                group, so the worst-case group is the HOTTEST KEY'S rows
+                per ``bucket_seconds``. Shrink ``bucket_seconds`` to bound
+                a mega-key (verified by the single-mega-key stress test
+                in tests/test_asof.py); phase 2 computes each bucket's
+                carry-in — the last source value from any strictly
+                earlier bucket — via a per-key window over the (tiny)
+                bucket-level rollup, then patches phase-1 misses. This is
+                the "applyInPandas over conv_id-salted partitions +
+                residual merge" design from BASELINE.json north_star.
+
+``merge_asof``— ``bucketed`` over ONE time bucket: phase 1 alone, the
+                cogroup keyed by the salt ``hash(by) % salt_buckets``
+                only. With one bucket there is nothing to carry in, so
+                phase 2 is skipped. One pandas call handles many keys,
+                amortizing per-group overhead; a single mega-key still
+                lands whole in one group — that's what ``bucketed`` is
+                for.
 """
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -72,8 +71,7 @@ def asof_join(
     allow_exact_matches: bool = True,
     tolerance_seconds: Optional[int] = None,
     bucket_seconds: int = 3600,
-    salt_buckets: int = 32,
-    num_groups: Optional[int] = None,
+    salt_buckets: Optional[int] = None,
     keep_match_ts: bool = False,
 ) -> DataFrame:
     """As-of join ``sources``' latest values onto each ``queries`` row.
@@ -83,9 +81,10 @@ def asof_join(
     ``tolerance_seconds``). Output column sets must be disjoint:
     ``value_cols`` may not collide with query columns.
 
-    ``num_groups`` (merge_asof) / ``salt_buckets`` (bucketed) control how
-    many cogroups the key space is hashed into — size to the cluster
-    (≈ 2-3× total cores) so pandas groups stay executor-memory-sized.
+    ``salt_buckets`` (merge_asof, bucketed) is how many cogroups the key
+    space is hashed into (default: the session's shuffle-partition
+    count) — size to the cluster (≈ 2-3× total cores) so pandas groups
+    stay executor-memory-sized. It never changes a result.
     """
     if value_cols is None:
         value_cols = [c for c in sources.columns if c not in (on, by)]
@@ -94,14 +93,14 @@ def asof_join(
         raise ValueError(f"value_cols collide with query columns: {sorted(clash)}")
     if strategy == "window":
         out = _asof_window(queries, sources, on, by, value_cols, allow_exact_matches)
-    elif strategy == "merge_asof":
-        out = _asof_merge(
-            queries, sources, on, by, value_cols, allow_exact_matches, num_groups
-        )
-    elif strategy == "bucketed":
+    elif strategy in ("merge_asof", "bucketed"):
+        if salt_buckets is None:
+            salt_buckets = int(
+                queries.sparkSession.conf.get("spark.sql.shuffle.partitions")
+            )
         out = _asof_bucketed(
             queries, sources, on, by, value_cols, allow_exact_matches,
-            bucket_seconds, salt_buckets,
+            bucket_seconds if strategy == "bucketed" else None, salt_buckets,
         )
     else:
         raise ValueError(f"unknown strategy: {strategy!r}")
@@ -174,71 +173,6 @@ def _merged_schema(
     return T.StructType(fields)
 
 
-def _asof_merge(
-    queries: DataFrame,
-    sources: DataFrame,
-    on: str,
-    by: str,
-    value_cols: list[str],
-    allow_exact: bool,
-    num_groups: Optional[int] = None,
-) -> DataFrame:
-    """Cogroup on ``hash(by) % num_groups`` — NOT on the raw key. Round 1
-    cogrouped per key: group count scaled with key cardinality and per-group
-    pandas overhead dominated (6.7s vs 0.7s for the window strategy at
-    sf0.1). A fixed group count amortizes that overhead — each pandas call
-    handles many keys at once via ``merge_asof(by=key)`` — and the shuffle
-    volume is identical (same rows, fewer heavier groups)."""
-    if num_groups is None:
-        num_groups = int(
-            queries.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    salt = F.pmod(F.xxhash64(F.col(by)), F.lit(num_groups)).cast("int")
-    q_s = queries.withColumn("__salt", salt)
-    # the key is re-aliased on the source side: when queries and sources
-    # share lineage (self-as-of), Spark's ambiguous-self-join check trips on
-    # the duplicated key attribute otherwise
-    src_proj = sources.select(
-        F.col(by).alias("__src_by"),
-        F.pmod(F.xxhash64(F.col(by)), F.lit(num_groups)).cast("int").alias(
-            "__salt"
-        ),
-        F.col(on).alias(_MATCH_TS),
-        *value_cols,
-    )
-    schema = _merged_schema(queries, sources, on, value_cols)
-    out_cols = [f.name for f in schema.fields]
-
-    def join_group(qpdf: pd.DataFrame, spdf: pd.DataFrame) -> pd.DataFrame:
-        if qpdf.empty:
-            return pd.DataFrame(columns=out_cols)
-        qpdf = qpdf.sort_values(on, kind="mergesort")
-        if spdf.empty:
-            res = qpdf.copy()
-            res[_MATCH_TS] = pd.NaT
-            for v in value_cols:
-                res[v] = None
-            return res[out_cols]
-        spdf = spdf.rename(columns={"__src_by": by})
-        spdf = spdf.sort_values(_MATCH_TS, kind="mergesort")
-        res = pd.merge_asof(
-            qpdf,
-            spdf.drop(columns=["__salt"]),
-            left_on=on,
-            right_on=_MATCH_TS,
-            by=by,
-            direction="backward",
-            allow_exact_matches=allow_exact,
-        )
-        return res[out_cols]
-
-    return (
-        q_s.groupBy("__salt")
-        .cogroup(src_proj.groupBy("__salt"))
-        .applyInPandas(join_group, schema=schema)
-    )
-
-
 def _asof_bucketed(
     queries: DataFrame,
     sources: DataFrame,
@@ -246,10 +180,14 @@ def _asof_bucketed(
     by: str,
     value_cols: list[str],
     allow_exact: bool,
-    bucket_seconds: int,
-    salt_buckets: int = 32,
+    bucket_seconds: Optional[int],
+    salt_buckets: int,
 ) -> DataFrame:
-    bucket = (epoch_seconds(F.col(on)) / bucket_seconds).cast("long")
+    """``bucket_seconds=None`` is one time bucket: phase 1 alone."""
+    if bucket_seconds is None:
+        bucket = F.lit(0).cast("long")
+    else:
+        bucket = (epoch_seconds(F.col(on)) / bucket_seconds).cast("long")
     salt = F.pmod(F.xxhash64(F.col(by)), F.lit(salt_buckets)).cast("int")
     q_b = queries.withColumn("__bkt", bucket).withColumn("__salt", salt)
     s_b = sources.withColumn("__bkt", bucket).withColumn("__salt", salt)
@@ -304,6 +242,8 @@ def _asof_bucketed(
         .cogroup(src_proj.groupBy("__salt", "__bkt"))
         .applyInPandas(join_bucket, schema=schema)
     )
+    if bucket_seconds is None:
+        return phase1.drop("__bkt", "__salt")
 
     # ---- phase 2: carry-in = last source value from strictly earlier
     # buckets. Bucket-level rollup is tiny (one row per non-empty

@@ -27,8 +27,8 @@ same-timestamp peers, never the row itself, never the future.
   documented bound; ``decayed_time_features_stable`` is the unbounded-
   span variant.
 - ``decayed_time_features_stable`` — the same semantics with segmented
-  renormalization (Arrow ``mapInPandas`` over sorted partitions,
-  vectorized across many entities per batch, no per-row Python loop):
+  renormalization (``plans.keyed.map_key_blocks``, vectorized across
+  many entities per call, no per-row Python loop):
   histories are cut into fixed 500-half-life segments, the cumulative
   sum runs within each segment at bounded exponent, and a per-segment
   carry folds earlier segments down by ``2^(-500 * gap)``. Works for
@@ -59,6 +59,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from featurescreening_jl_spark.functions.time import epoch_micros
+from featurescreening_jl_spark.plans.keyed import map_key_blocks
 
 __all__ = [
     "pit_global_prior",
@@ -286,15 +287,10 @@ def decayed_time_features_stable(
     """Same semantics as ``decayed_time_features`` (strictly-prior decayed
     sums), numerically stable for arbitrarily long entity histories.
 
-    Arrow ``mapInPandas`` over hash-partitioned, sorted partitions — NOT
-    a per-group ``applyInPandas``: the grouped-map form pays the pandas
-    per-call machinery once per ENTITY (~2.7 ms/group measured — 4 s of
-    pure Python-call overhead for 1,500 conversations, and at 10^9
-    conversations a non-starter), while here each Arrow batch is
-    processed as one vectorized block covering many entities, with
-    entity boundaries handled as just another segment reset. A block's
-    trailing (possibly batch-split) entity is held back and stitched to
-    the next batch, so entities never straddle a processing block.
+    Runs under ``plans.keyed.map_key_blocks``: each kernel call is one
+    vectorized block of many whole entities (not one ``applyInPandas``
+    call per entity), with entity boundaries handled as just another
+    segment reset.
 
     The stability trick: cut each entity's history at fixed
     500-half-life boundaries, run the ``v * 2^(x - seg_base)``
@@ -324,15 +320,10 @@ def decayed_time_features_stable(
     out_fields = ", ".join(f"`{n}` double" for n in vmap)
     schema = f"{in_fields}, {out_fields}"
 
-    def _block(pdf: pd.DataFrame) -> pd.DataFrame:
-        # pdf: sorted by (parts, ts, order), every entity complete
+    def _block(pdf: pd.DataFrame, gstarts: np.ndarray) -> pd.DataFrame:
         t = pdf[ts].to_numpy(dtype="datetime64[us]").astype("int64")
         gchange = np.zeros(len(pdf), dtype=bool)
-        gchange[0] = True
-        for c in parts:
-            col = pdf[c].to_numpy()
-            gchange[1:] |= col[1:] != col[:-1]
-        gstarts = np.flatnonzero(gchange)
+        gchange[gstarts] = True
         gsizes = np.diff(np.r_[gstarts, len(pdf)])
         # x relative to each entity's first (min, since sorted) event
         x = (t - np.repeat(t[gstarts], gsizes)) / 1.0e6 / half_life_s
@@ -375,33 +366,7 @@ def decayed_time_features_stable(
             pdf[name] = shrink * (prefix + np.repeat(carry, sizes))
         return pdf
 
-    def _stitch(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            # the trailing entity may continue in the next batch — hold
-            # it back. Entities are contiguous (partition sorted), so the
-            # suffix of rows equal to the last key IS the trailing entity.
-            tail = np.ones(len(pdf), dtype=bool)
-            for c in parts:
-                col = pdf[c].to_numpy()
-                tail &= col == col[-1]
-            # first index of the trailing contiguous run
-            nz = np.flatnonzero(~tail)
-            cut = (nz[-1] + 1) if len(nz) else 0
-            if cut:
-                yield _block(pdf.iloc[:cut].reset_index(drop=True))
-            buf = pdf.iloc[cut:].reset_index(drop=True)
-        if buf is not None and len(buf):
-            yield _block(buf)
-
-    prepped = df.repartition(*parts).sortWithinPartitions(
-        *parts, ts, *order
-    )
-    return prepped.mapInPandas(_stitch, schema)
+    return map_key_blocks(df, parts, [ts, *order], _block, schema)
 
 
 def rolling_origin_folds(

@@ -42,6 +42,7 @@ at any core count — verified by test.
 
 from __future__ import annotations
 
+import logging
 from collections import Counter
 from typing import Any, Iterator, Optional
 
@@ -60,6 +61,8 @@ __all__ = ["DEFAULT_ENSEMBLE_PARTITIONS", "ensemble_layout",
 
 _MAX_BINS = 32
 DEFAULT_ENSEMBLE_PARTITIONS = 64  # fixed: independent of cluster size
+
+log = logging.getLogger(__name__)
 
 
 def _grow_tree(
@@ -166,8 +169,8 @@ def local_forest_split_counts(
     return counts
 
 
-def _resolved_cfg(config: Optional[dict[str, Any]], n_features: int,
-                  num_partitions: int) -> dict[str, Any]:
+def _resolved_cfg(config: Optional[dict[str, Any]],
+                  n_features: int) -> dict[str, Any]:
     cfg = {**DEFAULT_CONFIG_FOR_FEATURE_IMPORTANCE, **(config or {})}
     n_sub = cfg["n_subfeatures"]
     if n_sub in (-1, 0):
@@ -177,8 +180,15 @@ def _resolved_cfg(config: Optional[dict[str, Any]], n_features: int,
     depth = cfg["max_depth"]
     cfg["_max_depth"] = 30 if depth is None or int(depth) < 0 else int(depth)
     cfg["_n_candidate_features"] = m
-    cfg["_trees"] = max(int(cfg["n_trees"]) // num_partitions, 1)
     return cfg
+
+
+def _partition_trees(n_trees: int, num_partitions: int) -> list[int]:
+    """Partition ``p``'s share of the total tree budget: ``n_trees // P``,
+    plus one for the first ``n_trees % P`` partitions, and at least one —
+    so a budget below ``P`` is raised to ``P``."""
+    base, extra = divmod(n_trees, num_partitions)
+    return [max(base + (p < extra), 1) for p in range(num_partitions)]
 
 
 def ensemble_layout(df, id_col: str, num_partitions: int):
@@ -197,12 +207,14 @@ def _split_count_matrix(
 ) -> np.ndarray:
     """``(num_partitions, n_features)`` int64 matrix: row ``p`` holds the
     split counts of partition ``p``'s sub-forest (all zero for an empty
-    partition). One Spark job over an input already in the layout."""
+    partition). One Spark job over an input already in the layout; logs
+    one warning when partitions are too small to grow a tree."""
     from pyspark.sql import functions as F
 
     seed = int(make_rng(rng).integers(0, 2**31 - 1))
     names = ff.feature_names
-    cfg = _resolved_cfg(config, len(names), num_partitions)
+    cfg = _resolved_cfg(config, len(names))
+    trees = _partition_trees(int(cfg["n_trees"]), num_partitions)
 
     labels = ff.distinct_labels()
     n_classes = len(labels)
@@ -232,16 +244,28 @@ def _split_count_matrix(
         X = pdf[list(names)].to_numpy(dtype=np.float64, copy=False)
         yv = pdf["__y"].to_numpy(dtype=np.int64)
         gen = np.random.default_rng(np.random.SeedSequence([seed, pid]))
-        counts = local_forest_split_counts(X, yv, n_classes, cfg, gen)
+        counts = local_forest_split_counts(
+            X, yv, n_classes, {**cfg, "_trees": trees[pid]}, gen
+        )
         dense = [counts[j] for j in range(len(names))]
-        yield pd.DataFrame({"pid": [pid], "counts": [dense]})
+        yield pd.DataFrame({"pid": [pid], "n": [len(pdf)], "counts": [dense]})
 
     # the layout fixes partition contents; the stage is map-only and its
     # P rows are collected as they are
-    rows = proj.mapInPandas(train, "pid int, counts array<long>").collect()
+    rows = proj.mapInPandas(
+        train, "pid int, n long, counts array<long>"
+    ).collect()
     matrix = np.zeros((num_partitions, len(names)), dtype=np.int64)
     for r in rows:
         matrix[r["pid"]] = r["counts"]
+    min_rows = 2 * int(cfg["min_samples_leaf"])
+    small = num_partitions - sum(r["n"] >= min_rows for r in rows)
+    if small:
+        log.warning(
+            "%d of %d ensemble partitions hold fewer than %d rows "
+            "(2 x min_samples_leaf) and grow no tree",
+            small, num_partitions, min_rows,
+        )
     return matrix
 
 
@@ -254,8 +278,9 @@ def feature_importance_partitioned(
 ) -> list[tuple[str, int]]:
     """Ranked ``(feature_name, split_count)`` via the partition ensemble.
 
-    ``config['n_trees']`` is the TOTAL tree budget, split evenly across
-    ``num_partitions`` (≥1 tree each). Ranking contract matches the MLlib
+    ``config['n_trees']`` is the TOTAL tree budget, split as evenly as
+    possible across ``num_partitions`` (≥1 tree each: a budget below
+    ``num_partitions`` is raised to it). Ranking contract matches the MLlib
     backend (``importance.rank_counts``): count desc, original column
     position asc; never-split features absent.
 

@@ -16,25 +16,27 @@ cannot survive.
    before partition *i+1*'s;
 2. ``sortWithinPartitions`` — rows are now globally ordered across the
    partition sequence;
-3. one tiny aggregate collects per-partition row counts (P rows — the
+3. ``monotonically_increasing_id()`` tags every row with
+   ``pid << 33 | pos`` — its range partition and its position in it —
+   and the tagged frame is checkpointed once;
+4. one tiny aggregate collects per-partition row counts (P rows — the
    ONLY driver-side state, bounded by the partition count, never data);
-4. cumulative offsets broadcast-join back, and an Arrow ``mapInPandas``
-   cumcount adds the within-partition index — vectorized per batch,
-   carrying one integer of state across batches, zero additional
-   shuffles after the range exchange.
+5. the rank is one JVM projection,
+   ``element_at(<literal cumulative offsets>, pid + 1) + pos + 1`` —
+   no Python, no join, zero additional shuffles after the range
+   exchange.
 
 Ties: callers must pass a TOTAL order (include a unique id as the last
-order column) — with ties the within-partition cumcount is still
+order column) — with ties the within-partition position is still
 deterministic for a fixed partitioning, but the rank of tied rows is
 then partitioning-dependent, same caveat as any ``row_number`` ranking.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from itertools import accumulate
+from typing import Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -54,64 +56,35 @@ def global_rank(
     ever funnelling the corpus through one task.
 
     Plan: one range exchange (+ in-partition sort), one P-row count
-    aggregate, one broadcast join of the P cumulative offsets, one
-    Arrow cumcount pass. Output schema: input columns + ``rank_col``
-    (long).
+    aggregate, one projection. Output schema: input columns +
+    ``rank_col`` (long).
     """
     cols = [F.col(c) if ascending else F.col(c).desc() for c in order_cols]
     parts = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    shaped = df.repartitionByRange(parts, *cols).sortWithinPartitions(*cols)
-    # materialize ONCE: the offsets job and the rank job must observe the
-    # IDENTICAL partition assignment (range boundaries come from sampling;
-    # recomputation is deterministic for deterministic inputs, but a
-    # nondeterministic upstream — sample(), speculative retry — would
-    # silently desync the two jobs without this)
-    with_pid = shaped.withColumn(
-        "__pid", F.spark_partition_id()
-    ).localCheckpoint()
+    # materialize ONCE: the counts job and the rank projection must
+    # observe the IDENTICAL partition assignment (range boundaries come
+    # from sampling; recomputation is deterministic for deterministic
+    # inputs, but a nondeterministic upstream — sample(), speculative
+    # retry — would silently desync the two without this)
+    tagged = (
+        df.repartitionByRange(parts, *cols)
+        .sortWithinPartitions(*cols)
+        .withColumn("__id", F.monotonically_increasing_id())
+        .localCheckpoint()
+    )
+    pid = F.shiftright("__id", 33)
 
     # P rows of driver-side state: (partition id, row count)
-    counts = (
-        with_pid.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .collect()
+    sizes = dict(
+        tagged.groupBy(pid.alias("__pid")).agg(F.count(F.lit(1))).collect()
     )
-    sizes = {r["__pid"]: r["__n"] for r in counts}
-    offsets = {}
-    acc = 0
-    for pid in sorted(sizes):
-        offsets[pid] = acc
-        acc += sizes[pid]
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()],
-            "__pid int, __off long",
-        )
-    )
-
-    joined = with_pid.join(off_df, "__pid")
-    out_schema = joined.drop("__pid", "__off").schema.add(rank_col, "long")
-    field_names = [f.name for f in out_schema.fields]
-
-    def add_rank(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one integer of state carried across Arrow batches — each task
-        # holds exactly one (range) partition, already sorted
-        seen = 0
-        for pdf in batches:
-            n = len(pdf)
-            pdf[rank_col] = (
-                pdf["__off"].to_numpy()
-                + seen
-                + np.arange(1, n + 1, dtype="int64")
-            )
-            seen += n
-            yield pdf[field_names]
-
-    # mapInPandas must not let Spark re-plan the partitioning between the
-    # sort and the cumcount: the projection below is narrow (drops only
-    # helper columns), no exchange can appear
-    return joined.mapInPandas(add_rank, out_schema)
+    offsets = F.array(*[
+        F.lit(o).cast("long")
+        for o in accumulate((sizes.get(p, 0) for p in range(parts)), initial=0)
+    ])
+    pos = F.col("__id").bitwiseAND(F.lit((1 << 33) - 1))
+    rank = F.element_at(offsets, (pid + 1).cast("int")) + pos + 1
+    return tagged.withColumn(rank_col, rank).drop("__id")
 
 
 def curriculum_buckets(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from featurescreening_jl_spark.frame import FeatureFrame
 from featurescreening_jl_spark.functions.time import epoch_micros, epoch_seconds
+from featurescreening_jl_spark.plans.keyed import map_key_blocks
 
 __all__ = [
     "turn_order_window",
@@ -373,19 +374,14 @@ def expanding_rank(
     replacement for a global ``percent_rank`` (which reads the future).
 
     No SQL window form exists (the frame would need a predicate on the
-    CURRENT row's value), so this is the module's one Arrow crossing —
-    ``mapInPandas`` over key-partitioned, key-sorted partitions, NOT a
-    per-key ``applyInPandas``: the grouped-map form pays the pandas
-    per-call machinery once per KEY (~3 ms/group measured — ~5 s of pure
-    call overhead for 1,500 conversations at sf0.1), while here each
-    Arrow batch covers many conversations and the trailing (possibly
-    batch-split) one is held back and stitched to the next batch (the
-    ``decayed_time_features_stable`` pattern). Per key the kernel is
-    O(n log n) and CHUNK-vectorized, not per-row Python: rows are
-    processed in blocks of 1024 — prior-chunk counts come from one
-    ``np.searchsorted`` over a maintained sorted prefix (vectorized over
-    the whole block), within-chunk counts from one boolean-matrix
-    reduction.
+    CURRENT row's value), so this is the module's one Arrow crossing:
+    ``plans.keyed.map_key_blocks``, whose kernel calls each cover many
+    whole conversations (not one ``applyInPandas`` call per key). Per
+    key the kernel is O(n log n) and CHUNK-vectorized, not per-row
+    Python: rows are processed in blocks of 1024 — prior-chunk counts
+    come from one ``np.searchsorted`` over a maintained sorted prefix
+    (vectorized over the whole block), within-chunk counts from one
+    boolean-matrix reduction.
 
     Skew note: a key must fit one processing block (like every grouped
     op here); the maintained state is ONE extra value array, so a
@@ -435,13 +431,7 @@ def expanding_rank(
             )
         return res
 
-    def _block(pdf: pd.DataFrame) -> pd.DataFrame:
-        # pdf: sorted by (by, *order), every key complete
-        keys = pdf[by].to_numpy()
-        change = np.zeros(len(pdf), dtype=bool)
-        change[0] = True
-        change[1:] = keys[1:] != keys[:-1]
-        starts = np.flatnonzero(change)
+    def _block(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
         ends = np.r_[starts[1:], len(pdf)]
         v = pdf["__v"].to_numpy()
         res = np.empty(len(pdf))
@@ -450,26 +440,7 @@ def expanding_rank(
         pdf[out] = res
         return pdf
 
-    def _stitch(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            keys = pdf[by].to_numpy()
-            nz = np.flatnonzero(keys != keys[-1])
-            cut = (nz[-1] + 1) if len(nz) else 0
-            if cut:
-                yield _block(pdf.iloc[:cut].reset_index(drop=True))
-            buf = pdf.iloc[cut:].reset_index(drop=True)
-        if buf is not None and len(buf):
-            yield _block(buf)
-
-    prepped = slim.repartition(F.col(by)).sortWithinPartitions(
-        by, *order_cols
-    )
-    ranked = prepped.mapInPandas(_stitch, schema)
+    ranked = map_key_blocks(slim, [by], order_cols, _block, schema)
     if not keep_all:
         return ranked.select(
             by, *order_cols, F.col("__v").alias(value_col), out

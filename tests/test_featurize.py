@@ -504,6 +504,37 @@ class TestPointInTimeTransforms:
             rtol=1e-12, equal_nan=True,
         )
 
+    def test_expanding_rank_cross_batch_stitching(self, spark, transcripts):
+        # 7-row Arrow batches split every conversation across batches:
+        # the held-back trailing key must make batch size invisible
+        from featurescreening_jl_spark.operators.window_features import (
+            expanding_rank,
+        )
+        import numpy as np
+
+        t = transcripts.select(
+            "conv_id", "turn_idx", "ts", F.length("text").cast("long").alias("y")
+        )
+
+        def ranks():
+            return (
+                expanding_rank(t, "y", keep_all=False)
+                .orderBy("conv_id", "turn_idx")
+                .toPandas()
+            )
+
+        key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+        old = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "7")
+            tiny = ranks()
+        finally:
+            spark.conf.set(key, old)
+        ref = ranks()
+        assert t.groupBy("conv_id").count().agg(F.min("count")).first()[0] > 7
+        pd.testing.assert_frame_equal(tiny, ref)
+        assert np.isnan(ref["pct_rank_past"]).sum() == ref["conv_id"].nunique()
+
 
 class TestPmiBigrams:
     def test_known_corpus(self, spark):

@@ -14,6 +14,7 @@ from collections import Counter
 
 from featurescreening_jl_spark.frame import FeatureFrame
 from featurescreening_jl_spark.operators.importance_dist import (
+    _partition_trees,
     ensemble_layout,
     feature_importance_partitioned,
     local_forest_split_counts,
@@ -200,3 +201,14 @@ class TestBackendAgreement:
 
         ml = feature_importance(ff, config=CFG, rng=5)
         assert dist[0][0] == ml[0][0] == "sig"
+
+
+class TestTreeBudget:
+    @pytest.mark.parametrize(
+        "n_trees,parts", [(1000, 64), (100, 64), (64, 4), (20, 64)]
+    )
+    def test_partition_trees_keep_the_budget(self, n_trees, parts):
+        trees = _partition_trees(n_trees, parts)
+        assert len(trees) == parts and min(trees) >= 1
+        assert sum(trees) == max(n_trees, parts)
+        assert max(trees) - min(trees) <= 1

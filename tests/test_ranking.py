@@ -77,6 +77,20 @@ class TestGlobalRank:
         assert len(per_part) > 1
 
 
+    def test_plan_is_one_jvm_projection(self, spark):
+        # the rank is element_at(offsets, pid + 1) + pos + 1 over the
+        # checkpointed frame: no Python worker, no broadcast join
+        plan = (
+            global_rank(self._df(spark), ["score", "doc_id"], num_partitions=8)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        for node in ("Python", "ArrowEval", "MapInPandas", "MapInArrow",
+                     "BroadcastExchange", "Window"):
+            assert node not in plan, (node, plan)
+
+
 class TestCurriculumBuckets:
     def test_equal_frequency_and_remainder(self, spark):
         df = spark.range(10).select(

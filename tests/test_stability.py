@@ -9,6 +9,8 @@ that equal the fit's own ranking when they hold every partition.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pytest
 
@@ -127,3 +129,20 @@ class TestStabilitySelect:
             (name, 1.0, float(rank))
             for rank, (name, _count) in enumerate(ranking[:3])
         ]
+
+    def test_warns_when_partitions_grow_no_tree(self, spark, caplog):
+        # 120 rows over 64 partitions leaves most below 2 x min_samples_leaf
+        ff = _separable_frame(spark)
+        logger = "featurescreening_jl_spark.operators.importance_dist"
+        for parts, warned in ((64, True), (4, False)):
+            caplog.clear()
+            with caplog.at_level(logging.WARNING, logger=logger):
+                stability_select(
+                    ff, top_m=2, n_folds=3, config=fixture_screen_config(),
+                    rng=11, num_partitions=parts,
+                )
+            msgs = [r.getMessage() for r in caplog.records
+                    if r.name == logger]
+            assert len(msgs) == int(warned), (parts, msgs)
+            if warned:
+                assert f"of {parts} ensemble partitions" in msgs[0]
