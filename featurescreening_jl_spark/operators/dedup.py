@@ -4,8 +4,9 @@ Five dedup families, each expressed so the expensive part is a Spark
 shuffle/join Catalyst can plan — never a driver-side loop:
 
 - exact           — hash-groupBy on normalized content; one shuffle.
-- minhash_lsh     — shingle → minhash signature (JVM-side xxhash64 with k
-                    salts) → band → bucket-join; candidate pairs verified
+- minhash_lsh     — shingle → minhash signature (xxhash64 with k salts, in
+                    one numpy Arrow kernel bit-identical to the JVM
+                    expression) → band → bucket-join; candidate pairs verified
                     by true Jaccard. The standard near-dup pipeline at
                     corpus scale: cost is driven by bucket collisions, not
                     O(n²).
@@ -34,6 +35,7 @@ A producer is its key expression, its predicate and its own bound.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -146,17 +148,24 @@ def _block_pairs(
     than ``cap`` rows of ``keyed`` first (:func:`_cap_buckets`, reported
     under ``op``); in cross mode only ``keyed`` is capped.
 
-    Plan: one shuffle of the keyed rows (or a broadcast of a small side),
-    one within-key join, one pair aggregate. The payload never rides the
-    join — :func:`_verify_pairs` fetches it for the surviving pairs."""
+    Plan: one within-key join, one pair aggregate. Self mode is a
+    sort-merge join whose two sides read ONE reused shuffle of the keyed
+    rows, so ``keyed`` is computed once; cross mode shuffles both sides
+    (or broadcasts a small one). The payload never rides the join —
+    :func:`_verify_pairs` fetches it for the surviving pairs."""
     if cap is not None:
         keyed = _cap_buckets(keyed, key_cols, cap, op)
     right = keyed if other is None else other
     a = keyed.select(F.col(keyed.columns[0]).alias("id_a"), *key_cols)
     b = right.select(F.col(right.columns[0]).alias("id_b"), *key_cols)
-    hits = a.join(b, on=key_cols)
     if other is None:
-        hits = hits.where(F.col("id_a") < F.col("id_b"))
+        # a broadcast self-join evaluates the keyed subplan once per side;
+        # a sort-merge join reads both sides from one reused exchange
+        hits = a.join(b.hint("merge"), on=key_cols).where(
+            F.col("id_a") < F.col("id_b")
+        )
+    else:
+        hits = a.join(b, on=key_cols)
     return hits.groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("shared"))
 
 
@@ -331,6 +340,11 @@ def minhash_signature(shingle_col, num_hashes: int = 64, *, pre_hashed: bool = F
     then for salt s in 0..k-1 take min over shingles of
     ``xxhash64(key, salt)``. All JVM-side array expressions — no UDF.
 
+    This is the public JVM REFERENCE of the signature: the LSH pipelines
+    compute the same values in the numpy kernel :func:`_minhash_kernel`
+    (the nested HOF below evaluates interpreted), and the kernel is
+    tested bit for bit against this expression.
+
     The two-level scheme (vs salting the string directly) does the
     variable-length string hashing ONCE instead of ``num_hashes`` times;
     the k salted passes then hash fixed 8-byte longs — measured ~2×
@@ -378,6 +392,120 @@ def minhash_signature(shingle_col, num_hashes: int = 64, *, pre_hashed: bool = F
     return F.element_at(F.transform(F.array(hashed), sig_of), 1)
 
 
+# Spark's XXH64 (``org.apache.spark.sql.catalyst.expressions.XXH64``) on
+# uint64 lanes: numpy integer arithmetic wraps mod 2^64 like Java's long.
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
+# At most this many shingle hashes per kernel pass, so one pass holds a few
+# 8 MiB lanes whatever the Arrow batch or the document size.
+_SIG_KERNEL_HASHES = 1 << 20
+
+
+def _rotl(x, r: int):
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+
+def _fmix(x):
+    """XXH64's final avalanche, in place."""
+    x ^= x >> np.uint64(33)
+    x *= _P2
+    x ^= x >> np.uint64(29)
+    x *= _P3
+    x ^= x >> np.uint64(32)
+    return x
+
+
+def _minhash_kernel(id_col: str, num_hashes: int):
+    """The ``mapInArrow`` function behind :func:`_signature_table`: batches
+    of ``(id, __h array<long>)`` → ``(id, __sig array<long>)``,
+    bit-identical to :func:`minhash_signature` with ``pre_hashed=True``.
+
+    Spark's ``xxhash64(h, s)`` for a long ``h`` and an int salt ``s`` is
+    ``hashInt(s, hashLong(h, 42))``. ``hashLong(h, 42)`` does not depend
+    on the salt, so it runs once per shingle; then k vectorized
+    ``hashInt`` passes each take a signed ``minimum.reduceat`` over every
+    document's slice of the list offsets. A NULL or empty array yields k
+    NULLs, as the HOF does (``array_min`` of nothing). Level-1 hashes are
+    never NULL (``xxhash64`` is not); a NULL element fails the zero-copy
+    read loudly."""
+    import pyarrow as pa
+
+    mask64 = (1 << 64) - 1
+    # hashInt XORs (s & 0xFFFFFFFF) · P1 into its state
+    salts = [np.uint64(s * int(_P1) & mask64) for s in range(num_hashes)]
+    # hashLong's initial state; 42 is the seed of Spark's ``xxhash64``
+    head = np.uint64(42 + int(_P5) + 8)
+
+    def signatures(ids, hs):
+        off = hs.offsets.to_numpy().astype(np.int64)
+        has = np.diff(off) > 0
+        x = hs.values.slice(off[0], off[-1] - off[0]).to_numpy().view(np.uint64)
+        # hashLong(h, 42)
+        x = _rotl(x * _P2, 31)
+        x *= _P1
+        x ^= head
+        x = _rotl(x, 27) * _P1 + _P4
+        # ... then the salt-free start of hashInt(s, ·)
+        x = _fmix(x) + _P5 + np.uint64(4)
+        starts = (off[:-1] - off[0])[has]
+        sig = np.zeros((len(hs), num_hashes), dtype=np.int64)
+        if len(starts):
+            mins = np.empty((len(starts), num_hashes), dtype=np.int64)
+            for i, c in enumerate(salts):
+                y = _rotl(x ^ c, 23) * _P2 + _P3
+                mins[:, i] = np.minimum.reduceat(_fmix(y).view(np.int64), starts)
+            sig[has] = mins
+        valid = np.repeat(has & hs.is_valid().to_numpy(zero_copy_only=False),
+                          num_hashes)
+        sig_list = pa.ListArray.from_arrays(
+            pa.array(np.arange(0, sig.size + 1, num_hashes, dtype=np.int32)),
+            pa.array(sig.ravel(), mask=~valid),
+        )
+        return pa.RecordBatch.from_arrays([ids, sig_list], [id_col, "__sig"])
+
+    def run(batches):
+        for batch in batches:
+            ids, hs = batch.column(0), batch.column(1)
+            off = hs.offsets.to_numpy().astype(np.int64)
+            lo = 0
+            while lo < len(hs):
+                # whole documents, up to _SIG_KERNEL_HASHES hashes (>= 1 doc)
+                hi = int(np.searchsorted(
+                    off, off[lo] + _SIG_KERNEL_HASHES, side="right"
+                )) - 1
+                hi = max(hi, lo + 1)
+                yield signatures(ids.slice(lo, hi - lo), hs.slice(lo, hi - lo))
+                lo = hi
+
+    return run
+
+
+def _signature_table(
+    sh: DataFrame, id_col: str, num_hashes: int, *, pre_hashed: bool = False
+) -> DataFrame:
+    """``(id, __sig)``: the minhash signature of every row of a ``(id,
+    __sh)`` shingle frame, from :func:`_minhash_kernel`. The level-1
+    hashes stay in the JVM (``__sh`` itself when ``pre_hashed``, else
+    ``xxhash64`` of each shingle string); only the k-salt pass is Python."""
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    hashed = (
+        F.col("__sh")
+        if pre_hashed
+        else F.transform("__sh", lambda s: F.xxhash64(s))
+    )
+    schema = StructType([
+        StructField(id_col, sh.schema[id_col].dataType),
+        StructField("__sig", ArrayType(LongType())),
+    ])
+    return sh.select(id_col, hashed.alias("__h")).mapInArrow(
+        _minhash_kernel(id_col, num_hashes), schema
+    )
+
+
 def _band_table(
     sh: DataFrame,
     id_col: str,
@@ -387,19 +515,16 @@ def _band_table(
     pre_hashed: bool = False,
 ) -> DataFrame:
     """(id, band, bucket) LSH banding of a (id, __sh shingle-array) frame:
-    minhash signature projection (no shuffle) → one row per band with the
-    band's signature slice hashed to an 8-byte bucket key. Shared by the
-    self-join (:func:`minhash_lsh_pairs`) and incremental
+    minhash signatures from one ``mapInArrow`` kernel
+    (:func:`_signature_table`; no shuffle, values bit-identical to
+    :func:`minhash_signature`) → one row per band with the band's
+    signature slice hashed to an 8-byte bucket key in the JVM. Shared by
+    the self-join (:func:`minhash_lsh_pairs`) and incremental
     (:func:`minhash_lsh_pairs_incremental`) candidate generators so the
     two sides of an incremental join bucket IDENTICALLY by construction.
     """
     rows_per_band = num_hashes // bands
-    sig = sh.select(
-        id_col,
-        minhash_signature(
-            F.col("__sh"), num_hashes, pre_hashed=pre_hashed
-        ).alias("__sig"),
-    )
+    sig = _signature_table(sh, id_col, num_hashes, pre_hashed=pre_hashed)
     return sig.select(
         id_col,
         F.explode(
@@ -474,9 +599,11 @@ def minhash_lsh_pairs(
     default (False, fully lazy) for plain short-document corpora, where
     shingling is cheaper than the checkpoint write.
 
-    Plan shape: signature projection (no shuffle) → explode into
-    ``bands`` rows each (the key expression) → :func:`_block_pairs`: one
-    shuffle of (8B key, id), self-join within buckets, one pair
+    Plan shape: level-1 shingle hashes in the JVM → the k-salt signature
+    in one ``mapInArrow`` kernel (no shuffle) → explode into ``bands``
+    rows each (the key expression) → :func:`_block_pairs`: one shuffle of
+    (8B key, id) that both sides of the within-bucket sort-merge
+    self-join read, so the signatures are computed once, then one pair
     aggregate → :func:`_verify_pairs`: Jaccard on a join back to the
     shingle arrays (on the ``hashed_verify`` tier: the hash-space screen,
     then the string verify of the survivors).

@@ -46,6 +46,11 @@ __all__ = [
     "embedding_drift",
 ]
 
+# ks_statistic's cumulative window runs in ONE task over the distinct
+# rounded values; past this many it fails loudly instead of exhausting that
+# task (coarsen ``round_dp`` or sample the inputs).
+MAX_KS_VALUES = 5_000_000
+
 
 def heavy_hitters(
     df: DataFrame, key_col: str, k: int = 10, m: int = 1024
@@ -393,7 +398,8 @@ def ks_statistic(
     bounded-final-state class as the profile gates. Rounding shifts the
     exact statistic by at most the mass within half an ulp of a
     boundary (identical in both engines, so the oracle matches
-    exactly).
+    exactly). More than :data:`MAX_KS_VALUES` distinct rounded values
+    fail the query instead of the window's one task.
     """
     va = (
         a.select(F.round(F.col(value_col).cast("double"), round_dp).alias("v"))
@@ -420,7 +426,18 @@ def ks_statistic(
         "v",
         (F.sum("n1").over(w) / F.sum("n1").over(tot)).alias("f1"),
         (F.sum("n2").over(w) / F.sum("n2").over(tot)).alias("f2"),
-        F.sum("n1").over(tot).alias("__na"),
+        # the cardinality guard rides the existing unbounded window (no
+        # extra job); coalesce keeps it in a column the output reads
+        F.coalesce(
+            F.assert_true(
+                F.count(F.lit(1)).over(tot) <= F.lit(MAX_KS_VALUES),
+                F.lit(
+                    f"ks_statistic: more than {MAX_KS_VALUES} distinct "
+                    f"values at round_dp={round_dp}"
+                ),
+            ).cast("long"),
+            F.sum("n1").over(tot),
+        ).alias("__na"),
         F.sum("n2").over(tot).alias("__nb"),
     ).select(
         "v",

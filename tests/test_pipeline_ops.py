@@ -88,6 +88,57 @@ class TestMinhash:
         )
         assert pairs.count() >= 0  # executes end-to-end
 
+    @pytest.mark.parametrize("num_hashes", [1, 7, 32, 64])
+    def test_kernel_bit_identical_to_jvm_signature(
+        self, spark, monkeypatch, num_hashes
+    ):
+        from featurescreening_jl_spark.operators import dedup
+
+        lo, hi = np.iinfo(np.int64).min, np.iinfo(np.int64).max
+        rng = np.random.default_rng(num_hashes)
+        rows = [
+            (0, None), (1, []), (2, [lo]), (3, [hi]),
+            (4, [lo, hi, -1, 0, 1, -1, lo]), (5, [-7, -7, -7]), (6, []),
+        ] + [
+            (i, rng.integers(lo, hi, int(rng.integers(1, 40)),
+                             endpoint=True).tolist())
+            for i in range(7, 40)
+        ]
+        df = spark.createDataFrame(rows, "id long, __sh array<long>")
+        ref = df.select(
+            "id",
+            dedup.minhash_signature(
+                F.col("__sh"), num_hashes, pre_hashed=True
+            ).alias("__sig"),
+        )
+        # several documents per kernel pass and documents longer than one
+        # pass, over Arrow batches of 3 rows
+        monkeypatch.setattr(dedup, "_SIG_KERNEL_HASHES", 16)
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+        try:
+            got = dict(map(tuple, dedup._signature_table(
+                df, "id", num_hashes, pre_hashed=True
+            ).collect()))
+        finally:
+            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+        want = dict(map(tuple, ref.collect()))
+        # what the HOF yields for NULL and empty arrays: k NULLs
+        assert want[0] == want[1] == want[6] == [None] * num_hashes
+        assert got == want
+
+    def test_kernel_matches_string_shingle_signature(self, spark):
+        from featurescreening_jl_spark.operators import dedup
+
+        df = spark.createDataFrame(
+            [(1, ["a b c", "b c d", ""]), (2, ["x"]), (3, [])],
+            "id long, __sh array<string>",
+        )
+        want = df.select(
+            "id", dedup.minhash_signature(F.col("__sh"), 16).alias("__sig")
+        )
+        assert sorted(map(tuple, dedup._signature_table(df, "id", 16)
+                          .collect())) == sorted(map(tuple, want.collect()))
+
 
 class TestSimhashAndJaccard:
     def test_simhash_dedup_identical_texts(self, spark):
@@ -691,12 +742,14 @@ class TestBlockPairs:
 
     @pytest.fixture()
     def keyed(self, spark):
-        # id 1 holds key (0, "x") twice; id 3 holds (1, "z") twice
+        # id 1 holds key (0, "x") twice; id 3 holds (1, "z") twice; ids 5
+        # and 6 share a NULL key, which matches nothing
         rows = [
             (1, 0, "x"), (1, 0, "x"), (1, 1, "y"),
             (2, 0, "x"), (2, 1, "y"),
             (3, 1, "z"), (3, 1, "z"),
             (4, 1, "z"),
+            (5, 1, None), (6, 1, None),
         ]
         return spark.createDataFrame(rows, "id long, band int, val string")
 
@@ -713,11 +766,26 @@ class TestBlockPairs:
         # matches with multiplicity: (1, 2) = 2·1 on (0,x) + 1·1 on (1,y)
         assert sorted(got) == [(1, 2, 3), (3, 4, 2)]
 
+    def test_self_mode_reads_keyed_once(self, spark, keyed):
+        from featurescreening_jl_spark.operators.dedup import _block_pairs
+
+        # a local relation: its size is known when the join is planned, so
+        # a broadcast self-join would be planned up front (and read keyed
+        # once per side)
+        local = spark.createDataFrame(keyed.toPandas(), keyed.schema)
+        pairs = _block_pairs(
+            local.mapInArrow(lambda batches: batches, local.schema),
+            ["band", "val"],
+        )
+        assert sorted(map(tuple, pairs.collect())) == [(1, 2, 3), (3, 4, 2)]
+        final = pairs._jdf.queryExecution().executedPlan().executedPlan()
+        assert final.toString().count("MapInArrow") == 1
+
     def test_cross_mode_keeps_identical_ids(self, spark, keyed):
         from featurescreening_jl_spark.operators.dedup import _block_pairs
 
         other = spark.createDataFrame(
-            [(1, 0, "x"), (2, 1, "z"), (5, 1, "y")],
+            [(1, 0, "x"), (2, 1, "z"), (5, 1, "y"), (7, 1, None)],
             "oid long, band int, val string",
         )
         got = {

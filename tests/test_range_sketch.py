@@ -316,6 +316,18 @@ class TestKSStatistic:
         assert row["n_a"] == 2 and row["n_b"] == 2
         assert row["ks_stat"] == 0.0
 
+    def test_distinct_value_cap_fails_the_query(self, spark, monkeypatch):
+        from featurescreening_jl_spark.operators import profiling
+
+        a = spark.range(10).select(F.col("id").cast("double").alias("value"))
+        b = spark.range(5).select(F.col("id").cast("double").alias("value"))
+        monkeypatch.setattr(profiling, "MAX_KS_VALUES", 10)
+        [row] = profiling.ks_statistic(a, b, "value").collect()
+        assert (row["n_a"], row["n_b"]) == (10, 5)
+        monkeypatch.setattr(profiling, "MAX_KS_VALUES", 9)
+        with pytest.raises(Exception, match="more than 9 distinct values"):
+            profiling.ks_statistic(a, b, "value").collect()
+
 
 class TestEmbeddingDrift:
     def _drift(self, spark, ref_rows, cur_rows, dim):
