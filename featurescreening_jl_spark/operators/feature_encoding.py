@@ -55,6 +55,7 @@ from __future__ import annotations
 
 from typing import Iterable, Mapping, Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -275,6 +276,57 @@ def decayed_time_features(
     return out
 
 
+def _decayed_prior_sums(
+    x: np.ndarray, gstarts: np.ndarray, v: np.ndarray
+) -> np.ndarray:
+    """The one numpy decayed-sum kernel: ``out_i = sum_{j < i} v_j *
+    2^(x_j - x_i)`` over the earlier rows of row i's entity, where
+    entities are the runs that start at ``gstarts`` and ``x`` is event
+    time in half-lives since the entity's first row (sorted, ≥ 0).
+    ``v`` is rows × value columns; the result has its shape.
+
+    Each entity's history is cut at fixed 500-half-life boundaries; the
+    ``v * 2^(x - seg_base)`` cumulative sum runs within each segment
+    (exponent ≤ 500, no overflow), and segments are folded together
+    with a per-segment carry that decays by ``2^(-500 * gap)`` (reset to
+    0 at entity changes). The only Python loop is over (entity ×
+    segment) runs of tiny numpy slices.
+    """
+    seg_hl = _SEGMENT_HALF_LIVES
+    seg = np.floor(x / seg_hl)
+    rel = x - seg * seg_hl  # in [0, 500)
+    terms = v * np.exp2(rel)[:, None]
+    # processing runs restart at entity OR 500-half-life boundaries
+    change = np.zeros(len(x), dtype=bool)
+    change[gstarts] = True
+    new_entity = change.copy()
+    change[1:] |= seg[1:] != seg[:-1]
+    starts = np.flatnonzero(change)
+    ends = np.r_[starts[1:], len(x)]
+    new_entity = new_entity[starts]
+    # exclusive prefix WITHIN each run. The cumsum must RESTART at every
+    # boundary: a single global cumsum would add a new segment's
+    # ~2^0-scale terms into the previous segment's ~2^500-scale total and
+    # cancel them to nothing when rebased.
+    prefix = np.empty(v.shape)
+    seg_total = np.empty((len(starts), v.shape[1]))
+    for k in range(len(starts)):
+        sl = slice(starts[k], ends[k])
+        c = np.cumsum(terms[sl], axis=0)
+        prefix[sl] = c - terms[sl]
+        seg_total[k] = c[-1]
+    # carry: decayed total of the entity's EARLIER segments, expressed at
+    # each segment's own base exponent; a new entity starts from 0
+    carry = np.zeros(seg_total.shape)
+    for k in range(1, len(starts)):
+        if new_entity[k]:
+            continue
+        gap = seg[starts[k]] - seg[starts[k - 1]]
+        carry[k] = (carry[k - 1] + seg_total[k - 1]) * np.exp2(-seg_hl * gap)
+    carry = np.repeat(carry, ends - starts, axis=0)
+    return np.exp2(-rel)[:, None] * (prefix + carry)
+
+
 def decayed_time_features_stable(
     df: DataFrame,
     part_cols: Sequence[str],
@@ -292,12 +344,9 @@ def decayed_time_features_stable(
     call per entity), with entity boundaries handled as just another
     segment reset.
 
-    The stability trick: cut each entity's history at fixed
-    500-half-life boundaries, run the ``v * 2^(x - seg_base)``
-    cumulative sum within each segment (exponent ≤ 500, no overflow),
-    and fold segments together with a per-segment carry that decays by
-    ``2^(-500 * gap)`` (reset to 0 at entity changes). The only Python
-    loop is over (entity × segment) runs of tiny numpy slices.
+    The stability trick (500-half-life segments with a decaying carry)
+    lives in ``_decayed_prior_sums``, the package's one numpy
+    decayed-sum kernel, which ``streaming_decayed_features`` runs too.
     ``value_cols`` maps output name → input column name (plain names,
     not Columns — they cross the Arrow boundary).
 
@@ -306,10 +355,8 @@ def decayed_time_features_stable(
     single entity with more rows than executor memory should be
     pre-capped (``per_key_cap``) — same caveat as every grouped op.
     """
-    import numpy as np  # noqa: PLC0415 — worker-side import kept local
-    import pandas as pd  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415 — worker-side import kept local
 
-    seg_hl = _SEGMENT_HALF_LIVES
     ts = ts_col
     parts = list(part_cols)
     order = list(order_cols)
@@ -322,48 +369,11 @@ def decayed_time_features_stable(
 
     def _block(pdf: pd.DataFrame, gstarts: np.ndarray) -> pd.DataFrame:
         t = pdf[ts].to_numpy(dtype="datetime64[us]").astype("int64")
-        gchange = np.zeros(len(pdf), dtype=bool)
-        gchange[gstarts] = True
         gsizes = np.diff(np.r_[gstarts, len(pdf)])
         # x relative to each entity's first (min, since sorted) event
         x = (t - np.repeat(t[gstarts], gsizes)) / 1.0e6 / half_life_s
-        seg = np.floor(x / seg_hl)
-        rel = x - seg * seg_hl  # in [0, 500)
-        grow = np.exp2(rel)
-        shrink = np.exp2(-rel)
-        # processing runs restart at entity OR 500-half-life boundaries
-        change = gchange.copy()
-        change[1:] |= seg[1:] != seg[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.r_[starts[1:], len(pdf)]
-        sizes = ends - starts
-        new_entity = gchange[starts]
-        for name, src in vmap.items():
-            v = pdf[src].to_numpy(dtype="float64")
-            terms = v * grow
-            # exclusive prefix WITHIN each run. The cumsum must RESTART
-            # at every boundary: a single global cumsum would add a new
-            # segment's ~2^0-scale terms into the previous segment's
-            # ~2^500-scale total and cancel them to nothing when rebased.
-            prefix = np.empty(len(pdf))
-            seg_total = np.empty(len(starts))
-            for k in range(len(starts)):
-                sl = slice(starts[k], ends[k])
-                c = np.cumsum(terms[sl])
-                prefix[sl] = c - terms[sl]
-                seg_total[k] = c[-1]
-            # carry: decayed total of the entity's EARLIER segments,
-            # expressed at each segment's own base exponent; a new
-            # entity starts from 0
-            carry = np.zeros(len(starts))
-            for k in range(1, len(starts)):
-                if new_entity[k]:
-                    continue
-                gap = seg[starts[k]] - seg[starts[k - 1]]
-                carry[k] = (carry[k - 1] + seg_total[k - 1]) * np.exp2(
-                    -seg_hl * gap
-                )
-            pdf[name] = shrink * (prefix + np.repeat(carry, sizes))
+        v = pdf[list(vmap.values())].to_numpy(dtype="float64")
+        pdf[list(vmap)] = _decayed_prior_sums(x, gstarts, v)
         return pdf
 
     return map_key_blocks(df, parts, [ts, *order], _block, schema)

@@ -17,15 +17,26 @@ Design points (the parts that matter at cluster scale):
 - ``F.session_window(ts, gap)`` is the streaming twin of the batch
   gap-sessionization in operators/window_features.py (lag + cumulative
   sum): same gap semantics, windows merge as turns arrive.
-- Aggregations are all built-ins → partial aggregation + state-store
-  backed incremental merge; no Python in the stream.
+- The windowed aggregations (sessions, rates) are built-ins → partial
+  aggregation + state-store backed incremental merge; no Python in those
+  streams.
+- The three per-turn stateful operators (running turn state, decayed
+  sums, expanding z-score) emit one row per arriving turn, which no
+  built-in aggregation expresses. They share one ``applyInPandasWithState``
+  fold, ``_fold_per_conversation``: Python sees one sorted frame per
+  conversation per micro-batch, with text lengths computed in the JVM.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from featurescreening_jl_spark.operators.feature_encoding import (
+    _decayed_prior_sums,
+)
 from featurescreening_jl_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 __all__ = [
@@ -94,83 +105,79 @@ def streaming_session_aggregates(
     )
 
 
-def streaming_turn_state_features(
-    stream: DataFrame,
-    state_ttl_seconds: int = 7200,
-) -> DataFrame:
-    """Per-turn RUNNING features computed incrementally with explicit
-    per-conversation state — the custom stateful operator
-    (``applyInPandasWithState``) the built-in windowed aggregations can't
-    express: it emits one row PER INPUT TURN (not per closed window),
-    carrying the running state as of that turn.
-
-    Output per arriving turn: ``(conv_id, turn_idx, turn_seq,
-    cum_tool_calls, time_since_prev)`` where ``turn_seq`` is the
-    conversation-arrival ordinal and ``time_since_prev`` the gap to the
-    previous processed turn (0.0 at conversation start) — matching the
-    batch ``turn_features`` running columns.
-
-    State per key is three scalars (turns seen, tool calls, last event
-    ts); ``EventTimeTimeout`` evicts a conversation once the watermark
-    passes ``state_ttl_seconds`` beyond its last turn, so state tracks
-    ACTIVE conversations only. (Event-time, not processing-time: a
-    processing-time timer keeps the query busy-looping empty micro-batches
-    until the TTL fires — measured as an availableNow run that never
-    quiesces — whereas event-time timeouts ride the watermark the data
-    itself advances.) Within a micro-batch, turns are processed in
-    ``(ts, turn_idx)`` order — the same total order the batch layer uses.
-    """
-    import numpy as np  # noqa: PLC0415 — worker-side import
-    import pandas as pd  # noqa: PLC0415
-
-    out_schema = (
-        "conv_id string, turn_idx int, turn_seq long, "
-        "cum_tool_calls long, time_since_prev double"
+def _text_len() -> Column:
+    """Turn text length as a long, computed in the JVM (the expression the
+    batch twins use); a function because building a ``Column`` needs an
+    active SparkContext."""
+    return F.length(F.coalesce(F.col("text"), F.lit(""))).cast("long").alias(
+        "text_len"
     )
-    state_schema = "n_turns long, cum_tools long, last_ts double"
+
+
+def _fold_per_conversation(
+    stream: DataFrame,
+    cols: list,
+    out_schema: str,
+    state_schema: str,
+    init: tuple,
+    step,
+    state_ttl_seconds: int,
+) -> DataFrame:
+    """The one stateful fold under the per-turn streaming operators.
+
+    Selects ``cols`` (which must include ``conv_id``, ``turn_idx`` and
+    ``ts``), sets the watermark to ``state_ttl_seconds`` and runs
+    ``applyInPandasWithState`` per ``conv_id`` with ``EventTimeTimeout``.
+    For each conversation in a micro-batch it calls ``step(pdf, t,
+    state) -> (out_cols, new_state)`` once: ``pdf`` holds every row the
+    conversation brought to the micro-batch, sorted by ``(ts, turn_idx)``
+    (stable mergesort), ``t`` is their event times in epoch seconds, and
+    ``state`` is the tuple carried from earlier micro-batches (``init``
+    for a new conversation). It emits one row per turn: ``conv_id``,
+    ``turn_idx``, then the ``out_cols`` mapping of column name →
+    per-row array, in ``out_schema`` order. Across micro-batches turns
+    fold in processing order: a turn that arrives after later turns were
+    already processed is folded after them (the late-data contract).
+
+    Spark splits one conversation's rows over several Arrow chunks when
+    they exceed ``spark.sql.execution.arrow.maxRecordsPerBatch``; the
+    chunks are concatenated before the sort, so turns fold in order
+    whatever the chunking. Memory bound: one conversation's rows of one
+    micro-batch.
+
+    Eviction: the timer is set to ``max(last_ts + ttl, watermark + 1 s)``
+    with ``last_ts`` the batch's latest turn, so the state is removed
+    once the watermark passes ``state_ttl_seconds`` beyond the
+    conversation's last activity and state size tracks ACTIVE
+    conversations only. (Event-time, not processing-time: a
+    processing-time timer keeps the query busy-looping empty
+    micro-batches until the TTL fires — measured as an availableNow run
+    that never quiesces — whereas event-time timeouts ride the watermark
+    the data itself advances.)
+    """
 
     def update(key, pdfs, state):
         if state.hasTimedOut:
             state.remove()
             return
-        n_turns, cum_tools, last_ts = (
-            state.get if state.exists else (0, 0, None)
+        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
+            ["ts", "turn_idx"], kind="mergesort", ignore_index=True
         )
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values(["ts", "turn_idx"], kind="mergesort")
-            ts = (pdf["ts"].astype("int64") / 1e9).to_numpy()
-            prev = np.concatenate(
-                ([ts[0] if last_ts is None else last_ts], ts[:-1])
+        t = (pdf["ts"].astype("int64") / 1e9).to_numpy()
+        out, new_state = step(pdf, t, state.get if state.exists else init)
+        yield pd.DataFrame(
+            {"conv_id": pdf["conv_id"], "turn_idx": pdf["turn_idx"], **out}
+        )
+        state.update(new_state)
+        state.setTimeoutTimestamp(
+            max(
+                int((t[-1] + state_ttl_seconds) * 1000),
+                state.getCurrentWatermarkMs() + 1000,
             )
-            tool_flags = pdf["tool"].notna().to_numpy().astype("int64")
-            cums = cum_tools + np.cumsum(tool_flags)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].to_numpy(),
-                    "turn_idx": pdf["turn_idx"].to_numpy(),
-                    "turn_seq": n_turns + np.arange(len(pdf), dtype="int64"),
-                    "cum_tool_calls": cums,
-                    "time_since_prev": ts - prev,
-                }
-            )
-            n_turns += len(pdf)
-            cum_tools = int(cums[-1])
-            last_ts = float(ts[-1])
-        state.update((n_turns, cum_tools, last_ts))
-        if last_ts is not None:
-            # evict when the watermark passes last activity + TTL; the
-            # timestamp must lie beyond the current watermark
-            state.setTimeoutTimestamp(
-                max(
-                    int((last_ts + state_ttl_seconds) * 1000),
-                    state.getCurrentWatermarkMs() + 1000,
-                )
-            )
+        )
 
     return (
-        stream.select("conv_id", "turn_idx", "ts", "tool")
+        stream.select(*cols)
         .withWatermark("ts", f"{state_ttl_seconds} seconds")
         .groupBy("conv_id")
         .applyInPandasWithState(
@@ -180,6 +187,50 @@ def streaming_turn_state_features(
             outputMode="append",
             timeoutConf="EventTimeTimeout",
         )
+    )
+
+
+def streaming_turn_state_features(
+    stream: DataFrame,
+    state_ttl_seconds: int = 7200,
+) -> DataFrame:
+    """Per-turn RUNNING features computed incrementally with explicit
+    per-conversation state — the custom stateful operator the built-in
+    windowed aggregations can't express: it emits one row PER INPUT TURN
+    (not per closed window), carrying the running state as of that turn.
+
+    Output per arriving turn: ``(conv_id, turn_idx, turn_seq,
+    cum_tool_calls, time_since_prev)`` where ``turn_seq`` is the
+    conversation-arrival ordinal and ``time_since_prev`` the gap to the
+    previous processed turn (0.0 at conversation start) — matching the
+    batch ``turn_features`` running columns.
+
+    State per key is three scalars (turns seen, tool calls, last event
+    ts). Within a micro-batch, turns are processed in ``(ts, turn_idx)``
+    order — the same total order the batch layer uses; ordering, TTL
+    eviction and late data follow ``_fold_per_conversation``.
+    """
+
+    def step(pdf, t, state):
+        n_turns, cum_tools, last_ts = state
+        prev = np.r_[t[0] if last_ts is None else last_ts, t[:-1]]
+        cums = cum_tools + np.cumsum(pdf["tool"].notna().to_numpy("int64"))
+        out = {
+            "turn_seq": n_turns + np.arange(len(pdf), dtype="int64"),
+            "cum_tool_calls": cums,
+            "time_since_prev": t - prev,
+        }
+        return out, (n_turns + len(pdf), int(cums[-1]), float(t[-1]))
+
+    return _fold_per_conversation(
+        stream,
+        ["conv_id", "turn_idx", "ts", "tool"],
+        "conv_id string, turn_idx int, turn_seq long, "
+        "cum_tool_calls long, time_since_prev double",
+        "n_turns long, cum_tools long, last_ts double",
+        (0, 0, None),
+        step,
+        state_ttl_seconds,
     )
 
 
@@ -192,95 +243,47 @@ def streaming_decayed_features(
     strictly-prior exponential time-decayed turn count and char sum, one
     output row per arriving turn, with O(1) state per conversation.
 
-    The decayed sum admits a constant-state recurrence that is also
-    numerically exact for unbounded stream lifetimes — state holds only
+    The decayed sum admits a constant-state recurrence — state holds only
     ``(last_ts, acc)`` where ``acc`` is the decayed sum INCLUDING the
-    last processed turn, valued at ``last_ts``; each new turn emits
-    ``acc * 2^(-(t - last_ts)/hl)`` and folds itself in. All decays are
-    relative (never an absolute-epoch exponent), so a conversation can
-    live for years of event time without overflow — the streaming
-    equivalent of the batch operator's segmented renormalization.
+    last processed turn, valued at ``last_ts``. A micro-batch's own
+    prior sums come from ``feature_encoding._decayed_prior_sums`` (the
+    batch operator's segmented kernel, so any span inside one micro-batch
+    is safe), plus the carried ``acc * 2^(-(t - last_ts)/hl)``. All
+    decays are relative (never an absolute-epoch exponent), so a
+    conversation can live for years of event time without overflow.
 
     Within a micro-batch, turns are processed in ``(ts, turn_idx)``
     order (the batch layer's total order); across micro-batches the
     recurrence follows processing order, the same late-data contract as
-    ``streaming_turn_state_features``. Batch spans are assumed ≪ 1000
-    half-lives (a micro-batch covers minutes; the half-life is a day).
+    ``streaming_turn_state_features``.
 
     Output per turn: ``(conv_id, turn_idx, dec_turns, dec_chars)`` —
     agreeing exactly with the batch operator when arrival order matches
     event-time order (pinned in tests/test_streaming.py).
     """
-    import numpy as np  # noqa: PLC0415 — worker-side import
-    import pandas as pd  # noqa: PLC0415
 
-    out_schema = (
-        "conv_id string, turn_idx int, dec_turns double, dec_chars double"
-    )
-    state_schema = "last_ts double, acc_cnt double, acc_chars double"
-
-    def update(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_ts, acc_cnt, acc_chars = (
-            state.get if state.exists else (None, 0.0, 0.0)
+    def step(pdf, t, state):
+        last_ts, acc_cnt, acc_chars = state
+        v = np.column_stack(
+            [np.ones(len(pdf)), pdf["text_len"].to_numpy(dtype="float64")]
         )
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values(["ts", "turn_idx"], kind="mergesort")
-            t = (pdf["ts"].astype("int64") / 1e9).to_numpy()
-            x = (t - t[0]) / half_life_s  # batch-relative half-lives
-            grow = np.exp2(x)
-            shrink = np.exp2(-x)
-            chars = (
-                pdf["text"].fillna("").str.len().to_numpy(dtype="float64")
-            )
-            outs = {}
-            for name, v, acc in (
-                ("dec_turns", np.ones(len(pdf)), acc_cnt),
-                ("dec_chars", chars, acc_chars),
-            ):
-                prefix = np.cumsum(v * grow) - v * grow
-                carry = (
-                    0.0
-                    if last_ts is None
-                    else acc * np.exp2(-(t[0] - last_ts) / half_life_s)
-                )
-                outs[name] = shrink * (prefix + carry)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].to_numpy(),
-                    "turn_idx": pdf["turn_idx"].to_numpy(),
-                    "dec_turns": outs["dec_turns"],
-                    "dec_chars": outs["dec_chars"],
-                }
-            )
-            # fold the batch into O(1) state, valued at the last turn
-            acc_cnt = float(outs["dec_turns"][-1] + 1.0)
-            acc_chars = float(outs["dec_chars"][-1] + chars[-1])
-            last_ts = float(t[-1])
-        state.update((last_ts, acc_cnt, acc_chars))
+        dec = _decayed_prior_sums((t - t[0]) / half_life_s, [0], v)
         if last_ts is not None:
-            state.setTimeoutTimestamp(
-                max(
-                    int((last_ts + state_ttl_seconds) * 1000),
-                    state.getCurrentWatermarkMs() + 1000,
-                )
-            )
+            decay = np.exp2(-(t - last_ts) / half_life_s)[:, None]
+            dec = dec + np.array([acc_cnt, acc_chars]) * decay
+        # fold the batch into O(1) state, valued at the last turn
+        acc_cnt, acc_chars = dec[-1] + v[-1]
+        out = {"dec_turns": dec[:, 0], "dec_chars": dec[:, 1]}
+        return out, (float(t[-1]), float(acc_cnt), float(acc_chars))
 
-    return (
-        stream.select("conv_id", "turn_idx", "ts", "text")
-        .withWatermark("ts", f"{state_ttl_seconds} seconds")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        )
+    return _fold_per_conversation(
+        stream,
+        ["conv_id", "turn_idx", "ts", _text_len()],
+        "conv_id string, turn_idx int, dec_turns double, dec_chars double",
+        "last_ts double, acc_cnt double, acc_chars double",
+        (None, 0.0, 0.0),
+        step,
+        state_ttl_seconds,
     )
 
 
@@ -360,71 +363,40 @@ def streaming_expanding_zscore(
     in tests/test_streaming.py). Same late-data contract as the other
     stateful ops: within a micro-batch turns process in (ts, turn_idx)
     order, across batches in processing order; event-time TTL evicts
-    idle conversations.
+    idle conversations. The state keeps its ``last_ts`` field so
+    checkpoints written with it still restore.
     """
-    import numpy as np  # noqa: PLC0415 — worker-side import
-    import pandas as pd  # noqa: PLC0415
 
-    out_schema = "conv_id string, turn_idx int, text_len long, zscore double"
-    state_schema = "last_ts double, n long, s1 long, s2 long"
-
-    def update(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_ts, n, s1, s2 = (
-            state.get if state.exists else (None, 0, 0, 0)
+    def step(pdf, t, state):
+        _, n, s1, s2 = state
+        v = pdf["text_len"].to_numpy(dtype="int64")
+        # strictly-prior exact sums at each row: state + batch prefix
+        np_ = n + np.arange(len(v), dtype="int64")
+        s1p = s1 + np.cumsum(v) - v
+        s2p = s2 + np.cumsum(v * v) - v * v
+        var_num = (np_ * s2p - s1p * s1p).astype("float64")
+        with np.errstate(invalid="ignore", divide="ignore"):
+            mean = s1p.astype("float64") / np_.astype("float64")
+            z = (v.astype("float64") - mean) / np.sqrt(
+                var_num / (np_ * (np_ - 1)).astype("float64")
+            )
+        z = np.where((np_ >= 2) & (var_num > 0), z, np.nan)
+        new_state = (
+            float(t[-1]),
+            int(np_[-1] + 1),
+            int(s1p[-1] + v[-1]),
+            int(s2p[-1] + v[-1] * v[-1]),
         )
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            pdf = pdf.sort_values(["ts", "turn_idx"], kind="mergesort")
-            v = (
-                pdf["text"].fillna("").str.len().to_numpy(dtype="int64")
-            )
-            # strictly-prior exact sums at each row: state + batch prefix
-            np_ = n + np.arange(len(v), dtype="int64")
-            s1p = s1 + np.cumsum(v) - v
-            s2p = s2 + np.cumsum(v * v) - v * v
-            var_num = (np_ * s2p - s1p * s1p).astype("float64")
-            with np.errstate(invalid="ignore", divide="ignore"):
-                mean = s1p.astype("float64") / np_.astype("float64")
-                z = (v.astype("float64") - mean) / np.sqrt(
-                    var_num / (np_ * (np_ - 1)).astype("float64")
-                )
-            z = np.where((np_ >= 2) & (var_num > 0), z, np.nan)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].to_numpy(),
-                    "turn_idx": pdf["turn_idx"].to_numpy(),
-                    "text_len": v,
-                    "zscore": z,
-                }
-            )
-            n = int(np_[-1] + 1)
-            s1 = int(s1p[-1] + v[-1])
-            s2 = int(s2p[-1] + v[-1] * v[-1])
-            last_ts = float(pdf["ts"].astype("int64").iloc[-1] / 1e9)
-        state.update((last_ts, n, s1, s2))
-        if last_ts is not None:
-            state.setTimeoutTimestamp(
-                max(
-                    int((last_ts + state_ttl_seconds) * 1000),
-                    state.getCurrentWatermarkMs() + 1000,
-                )
-            )
+        return {"text_len": v, "zscore": z}, new_state
 
-    return (
-        stream.select("conv_id", "turn_idx", "ts", "text")
-        .withWatermark("ts", f"{state_ttl_seconds} seconds")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        )
+    return _fold_per_conversation(
+        stream,
+        ["conv_id", "turn_idx", "ts", _text_len()],
+        "conv_id string, turn_idx int, text_len long, zscore double",
+        "last_ts double, n long, s1 long, s2 long",
+        (None, 0, 0, 0),
+        step,
+        state_ttl_seconds,
     )
 
 
